@@ -1,7 +1,7 @@
 """Job-floor investigation (VERDICT r7 item 5): measure the 4 headline
 queries stuck above 2x vs DuckDB at ~40-60 ms absolute, against
 candidate single-action rewrites and against the measured Spark
-single-job floor on this box.
+single-job floor and per-task Python floor.
 
 Methodology mirrors bench.py's steady-state: one warm session, same
 DataFrame handle re-executed (plan reused), min of N, toPandas().
@@ -93,7 +93,14 @@ def main():
     # and a single-scan count over the smallest real table
     floor_df = spark.range(1).selectExpr("id")
     nation = table(spark, SF, "nation").groupBy().count()
+    # Python-task floor: a one-row identity mapInArrow next to the same
+    # job without Python, both in ONE task (a default range(1) runs
+    # defaultParallelism tasks); the gap is the fixed cost of a Python task
+    one_task = spark.range(0, 1, 1, 1)
+    py_floor_df = one_task.mapInArrow(lambda batches: batches, "id long")
     print("floor range(1):", steady(floor_df))
+    print("floor range(1), one task:", steady(one_task))
+    print("floor python task (1-row mapInArrow):", steady(py_floor_df))
     print("floor nation-agg:", steady(nation))
     for name in ("agg_pivot", "fn_json", "evt_funnel", "set_intersect"):
         print(f"{name} current:", steady(Q[name].fn(spark, SF)))

@@ -17,6 +17,8 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime confs applied to ANY session that runs engine queries (including a
 # driver-provided session we did not create). All of these are documented
 # runtime-settable SQL confs.
@@ -39,6 +41,28 @@ def apply_runtime_confs(spark: SparkSession) -> None:
 
 
 @_contextmanager
+def pinned_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime ``confs`` for the duration of the block, then restore
+    the caller's values (also when the block raises). A conf the session
+    refuses to set is left as it is."""
+    prev = {}
+    for k, v in confs.items():
+        try:
+            before = spark.conf.get(k)
+            spark.conf.set(k, v)
+            prev[k] = before
+        except Exception:
+            pass  # locked-down session: run with whatever it has
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                pass
+
+
 def stream_partitions(spark: SparkSession, n: int = 8):
     """Pin ``spark.sql.shuffle.partitions`` for the duration of a
     streaming drain, then restore the caller's value.
@@ -52,19 +76,7 @@ def stream_partitions(spark: SparkSession, n: int = 8):
     real cluster the state partition count should instead be sized to
     executor count x a small factor at the first deployment of each
     checkpoint)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    except Exception:
-        prev = None  # locked-down session: run with whatever it has
-    try:
-        yield
-    finally:
-        if prev is not None:
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-            except Exception:
-                pass
+    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def get_spark(
@@ -104,6 +116,13 @@ def get_spark(
         )
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.log.level", "ERROR")
+        # Python workers start from the engine's daemon, which stops every
+        # task from re-reading pyspark.zip and the spark-core jar (~0.2 s
+        # per task; see pyworker.py). The package's parent goes on the
+        # workers' PYTHONPATH so the daemon imports whatever directory the
+        # JVM starts in; Spark merges its own paths into this value.
+        .config("spark.python.daemon.module", "shippinglanes_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -37,7 +37,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import apply_runtime_confs, stream_partitions
+from ..session import apply_runtime_confs, pinned_confs, stream_partitions
 from .lift import _eventtime_ts
 
 CUTOFF = "2024-01-08"  # late batch: ts < CUTOFF
@@ -264,9 +264,9 @@ def _stage_chrono_with_flush(spark, sf_dir: str) -> str:
     surfaces only after the watermark passes its join bound, and the
     watermark advances using the batch BEFORE last and evicts in the
     batch AFTER it advances. A second flush batch used to carry that
-    eviction pass; the engine's no-data micro-batch (on by default)
-    runs it after the flush batch advances the watermark, so one flush
-    suffices (round 12, hash-verified at all three SFs). Chronological
+    eviction pass; the engine's no-data micro-batch (pinned on for the
+    drain) runs it after the flush batch advances the watermark, so one
+    flush suffices (round 12, hash-verified at all three SFs). Chronological
     order means no real row ever arrives late (this query is about
     OUTER emission, not drops — stream_late_accounting covers drops)."""
     import datetime
@@ -307,9 +307,9 @@ def _stage_chrono_with_flush(spark, sf_dir: str) -> str:
     # each extra micro-batch pays a full incremental re-plan + state
     # pass. Round 12: the second flush batch dropped — after the flush
     # batch advances the watermark past every real row's eviction bound,
-    # the engine's NO-DATA micro-batch (noDataMicroBatches, on by
-    # default) runs the eviction pass itself; the flush rows' own state
-    # never needs to evict because they are filtered from the result.
+    # the engine's NO-DATA micro-batch (noDataMicroBatches, pinned on
+    # by the drain) runs the eviction pass itself; the flush rows' own
+    # state never needs to evict because they are filtered from the result.
     # Verified hash-equal to the batch interval join at all three SFs.
     parts = [
         ("b0_data.parquet", t),
@@ -383,5 +383,12 @@ def stream_join_outer(spark, sf_dir):
         & (F.col("v_ts") <= F.col("p_ts")),
         "left_outer",
     ).select("p_user", "purchase_id", "view_id")
-    out = _drain(joined, "stream_join_outer", "append", partitions=4)
+    # the eviction pass after the flush batch IS the no-data micro-batch,
+    # so pin it on for the drain instead of trusting the session default
+    no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
+    try:
+        with pinned_confs(spark, no_data):
+            out = _drain(joined, "stream_join_outer", "append", partitions=4)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)  # the result is in memory
     return out.where(F.col("p_user") >= 0)

@@ -3,6 +3,7 @@ append-mode path used in production for late data."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from shippinglanes_spark.registry import all_queries
@@ -290,3 +291,35 @@ def test_stream_partitions_pin_restores_conf(spark):
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _outer_stage_dirs() -> set[str]:
+    root = "/tmp/shippinglanes_stage"
+    if not os.path.isdir(root):
+        return set()
+    return {d for d in os.listdir(root) if d.startswith("outer_")}
+
+
+def test_stream_join_outer_leaves_no_stage_dir(spark, sf_dir):
+    """The drained result lives in the memory sink, so the staged input
+    files are removed once the drain ends."""
+    before = _outer_stage_dirs()
+    out = all_queries()["stream_join_outer"].fn(spark, sf_dir)
+    assert _outer_stage_dirs() - before == set()
+    assert out.count() > 0  # still readable after the stage is gone
+
+
+def test_stream_join_outer_pins_no_data_batches(spark, sf_dir):
+    """The outer join's eviction pass is the no-data micro-batch: with the
+    session conf turned off the drain must still match its oracle, and the
+    caller's value must read back afterwards."""
+    from shippinglanes_spark.testing import compare
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        compare(spark, all_queries()["stream_join_outer"], sf_dir)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
