@@ -87,9 +87,6 @@ HEADLINE = {
     "evt_funnel": "evt_funnel",
 }
 
-# streaming-sink queries can't be timed by toPandas(); everything else is
-STREAM_SKIP = set()
-
 # The driver captures only the stdout TAIL; the one-line JSON summary
 # must always fit inside it. Single source of truth — the drift
 # verdict's self-degrade cutoff derives from it below, and
@@ -110,12 +107,19 @@ REF_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "bench_ref.json"
 )
 
+# Absolute floors (sec) of the two regression gates. The sub-100-ms
+# headliners sit AT the measured 33-64 ms single-action floor and
+# jitter across its whole band; the ~25-40 ms job-floor families would
+# flag on scheduler jitter under anything below 0.5 s.
+HEADLINE_FLOOR = 0.1
+FAMILY_FLOOR = 0.5
+
 
 def find_regressions(
     families: dict[str, float],
     ref: dict[str, float],
     threshold: float = 1.5,
-    floor: float = 0.5,
+    floor: float = FAMILY_FLOOR,
     k: int = 5,
 ) -> dict[str, float]:
     """Worst-k in-sweep regressions vs the committed previous-round
@@ -133,86 +137,80 @@ def find_regressions(
     return {n: regs[n] for n in worst}
 
 
-def _headline_child(names_csv: str) -> None:
-    """Re-time headline queries with the STEADY methodology (one
-    DataFrame handle, repeated toPandas — QueryExecution reused) on a
-    fresh subprocess JVM. The headliner regression gate's confirmation
-    path: in-process samples can catch GC/scheduler noise (round 8:
-    sim_pairs_thresh sampled +54% while its clean steady time was
-    flat), so flags only survive if the clean-JVM steady number holds
-    the ratio. Prints one JSON line {bench_name: steady_sec}."""
+def best_of(n: int, action) -> float:
+    """Min wall seconds over n calls of action()."""
+    best = float("inf")
+    for _ in range(n):
+        t0 = time.perf_counter()
+        action()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def _noop_save(df) -> None:
+    """Full distributed execution without the driver-side transfer."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _child(flag: str, names_csv: str) -> None:
+    """Time the given names on ONE fresh session (a subprocess, so the
+    JVM carries no sweep heap/JIT state), min of 3 runs each, after the
+    same warmup as the sweep session. Prints one JSON line {name: sec},
+    -1.0 marking a name that failed.
+
+    --headline-child takes bench (HEADLINE) names and re-times them with
+    the STEADY methodology: one DataFrame handle, repeated toPandas,
+    QueryExecution reused. It is the headliner gate's confirmation path:
+    in-process samples can catch GC/scheduler noise (round 8:
+    sim_pairs_thresh sampled +54% while its clean steady time was flat),
+    so flags only survive if the clean-JVM steady number holds the ratio.
+
+    --isolated-child takes registry names and rebuilds each one per run
+    into the noop sink (re-planned each time, like the sweep), so the
+    number reflects steady per-query cost on a quiet JVM, not first-run
+    JIT compilation of this query's generated code. Round 12: this was
+    min-of-2, which confirmed two FALSE regression flags — multi-stage
+    metadata-sized queries need 3-4 runs before C2 reaches steady state
+    (measured: agg_kruskal_wallis 2.1 -> 1.2 -> 0.92 -> 0.83 on one JVM
+    vs its 0.904 in-sweep reference; emb_hard_negatives 2.7 -> 0.46).
+    One extra run per isolated name keeps the child far inside its
+    600 s budget."""
+    headline = flag == "--headline-child"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        app_name="shippinglanes-bench-hiso", cpus=cpus, shuffle_partitions=8
-    )
-    registry = all_queries()
-    registry["agg_groupby"].fn(spark, sf_dir).collect()
-    out = {}
-    for bench_name in names_csv.split(","):
-        try:
-            df = registry[HEADLINE[bench_name]].fn(spark, sf_dir)
-            df.toPandas()  # cold build, not measured
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                df.toPandas()
-                best = min(best, time.perf_counter() - t0)
-            out[bench_name] = round(best, 3)
-        except Exception:
-            out[bench_name] = -1.0  # visible failure marker, never silent
-    print(json.dumps(out))
-
-
-def _isolated_child(names_csv: str) -> None:
-    """Time the given queries on ONE fresh session (a subprocess, so the
-    JVM carries no sweep heap/JIT state). Prints one JSON line."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="shippinglanes-bench-iso", cpus=cpus, shuffle_partitions=8
+        app_name="shippinglanes-bench-hiso" if headline else "shippinglanes-bench-iso",
+        cpus=cpus,
+        shuffle_partitions=8,
     )
     registry = all_queries()
     # same warmup as the sweep session: JVM + parquet footer caches
     registry["agg_groupby"].fn(spark, sf_dir).collect()
     out = {}
     for name in names_csv.split(","):
-        # min of THREE full builds (re-planned each time, like the sweep)
-        # so the number reflects steady per-query cost on a quiet JVM, not
-        # first-run JIT compilation of this query's generated code.
-        # Round 12: was min-of-2, which confirmed two FALSE regression
-        # flags — multi-stage metadata-sized queries need 3-4 runs before
-        # C2 reaches steady state (measured: agg_kruskal_wallis 2.1 ->
-        # 1.2 -> 0.92 -> 0.83 on one JVM vs its 0.904 in-sweep reference;
-        # emb_hard_negatives 2.7 -> 0.46). One extra run per isolated
-        # name keeps the child far inside its 600 s budget.
-        best = float("inf")
         try:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            out[name] = round(best, 3)
+            if headline:
+                df = registry[HEADLINE[name]].fn(spark, sf_dir)
+                df.toPandas()  # cold build, not measured
+                action = df.toPandas
+            else:
+                fn = registry[name].fn
+                action = lambda: _noop_save(fn(spark, sf_dir))  # noqa: E731
+            out[name] = round(best_of(3, action), 3)
         except Exception:
             out[name] = -1.0  # visible failure marker, never silent
     print(json.dumps(out))
 
 
-def _isolate_headliners(names: list[str]) -> dict[str, float]:
-    """Clean-JVM steady re-measurement for flagged headliners (one
-    subprocess for the whole batch)."""
+def _run_child(flag: str, names: list[str]) -> dict[str, float]:
+    """Run `names` through `bench.py flag` in one fresh subprocess JVM
+    (one JVM for the whole batch keeps the bench's wall-clock bounded);
+    every name reads -1.0 if the child fails or times out."""
     import subprocess
 
     try:
         r = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--headline-child",
-                ",".join(names),
-            ],
+            [sys.executable, os.path.abspath(__file__), flag, ",".join(names)],
             capture_output=True,
             text=True,
             timeout=600,
@@ -220,6 +218,29 @@ def _isolate_headliners(names: list[str]) -> dict[str, float]:
         return json.loads(r.stdout.strip().splitlines()[-1])
     except Exception:
         return {name: -1.0 for name in names}
+
+
+def confirm(
+    candidates: dict[str, float],
+    iso: dict[str, float],
+    ref_map: dict[str, float],
+    floor: float,
+) -> dict[str, float]:
+    """Re-judge sampled regression flags on their clean-JVM numbers
+    (`iso`): a flag survives with the clean ratio vs `ref_map` when that
+    ratio is still > 1.5 and the clean time >= `floor`. A failed
+    isolation (-1.0, or a name missing from `iso`) keeps the sampled
+    flag — never silently clear what could not be re-measured."""
+    out = {}
+    for n, sampled in candidates.items():
+        clean = iso.get(n, -1.0)
+        if clean <= 0:
+            out[n] = sampled
+            continue
+        ratio = round(clean / ref_map[n], 2)
+        if ratio > 1.5 and clean >= floor:
+            out[n] = ratio
+    return out
 
 
 def families_drift(
@@ -262,42 +283,9 @@ def families_drift(
     }
 
 
-def _isolate_slowest(
-    families: dict[str, float], k: int = 10, extra: list[str] | None = None
-) -> dict[str, float]:
-    """Re-run the k slowest sweep queries in one fresh subprocess JVM
-    (quiet heap, no sweep GC/JIT interference; one JVM for all k keeps
-    the bench's wall-clock bounded). `extra` names (regression-gate
-    candidates) join the batch so their flags get a clean-JVM number."""
-    import subprocess
-
-    slowest = sorted(families, key=families.get, reverse=True)[:k]
-    for name in extra or []:
-        if name not in slowest:
-            slowest.append(name)
-    try:
-        r = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--isolated-child",
-                ",".join(slowest),
-            ],
-            capture_output=True,
-            text=True,
-            timeout=600,
-        )
-        return json.loads(r.stdout.strip().splitlines()[-1])
-    except Exception:
-        return {name: -1.0 for name in slowest}
-
-
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--isolated-child":
-        _isolated_child(sys.argv[2])
-        return
-    if len(sys.argv) >= 3 and sys.argv[1] == "--headline-child":
-        _headline_child(sys.argv[2])
+    if len(sys.argv) >= 3 and sys.argv[1] in ("--isolated-child", "--headline-child"):
+        _child(sys.argv[1], sys.argv[2])
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -322,12 +310,8 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.toPandas()  # full materialization, like fetchall
             cold[bench_name] = round(time.perf_counter() - t0, 3)
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df.toPandas()  # same handle: QueryExecution reused
-                best = min(best, time.perf_counter() - t0)
-            timings[bench_name] = round(best, 3)
+            # same handle: QueryExecution reused
+            timings[bench_name] = round(best_of(2, df.toPandas), 3)
         except Exception as exc:  # never lose the whole artifact to one query
             headline_errors[bench_name] = f"{type(exc).__name__}: {exc}"[:300]
 
@@ -341,29 +325,23 @@ def main() -> None:
     # Headliner regression gate (round-8 gap: the families gate never
     # covered the 14 headline steady numbers, and the only real
     # round-over-round movement — sim_pairs_thresh +54% — rode through
-    # unflagged). Same isolate-and-confirm shape as the families gate;
-    # floor 0.1 s because the sub-100-ms headliners sit AT the measured
-    # 33-64 ms single-action floor and jitter across its whole band.
+    # unflagged). Same isolate-and-confirm shape as the families gate,
+    # on HEADLINE_FLOOR.
     h_candidates = find_regressions(
-        timings, ref.get("queries", {}), floor=0.1
+        timings, ref.get("queries", {}), floor=HEADLINE_FLOOR
     )
     if isolate and h_candidates:
-        iso_h = _isolate_headliners(list(h_candidates))
-        out_h: dict[str, float] = {}
-        for n, sample_ratio in h_candidates.items():
-            clean = iso_h.get(n, -1.0)
-            if clean <= 0:  # isolation failed: keep the sampled flag
-                out_h[n] = sample_ratio
-                continue
-            ratio = round(clean / ref["queries"][n], 2)
-            if ratio > 1.5 and clean >= 0.1:
-                out_h[n] = ratio
-        h_candidates = out_h
+        h_candidates = confirm(
+            h_candidates,
+            _run_child("--headline-child", list(h_candidates)),
+            ref["queries"],
+            HEADLINE_FLOOR,
+        )
 
     families: dict[str, float] = {}
     family_errors: dict[str, str] = {}
     if sweep:
-        sweep_names = [n for n in driver_queries() if n not in STREAM_SKIP]
+        sweep_names = list(driver_queries())
         # SPARK_GRAFT_BENCH_SWEEP=sample: deterministic 1-in-3 slice
         # (md5 of the name, not position — stable as the registry grows)
         # for when the runner's time budget can't fit the full sweep.
@@ -405,13 +383,10 @@ def main() -> None:
                 _floor_probe(i)
             t0 = time.perf_counter()
             try:
-                # noop sink: full distributed execution without the
-                # driver-side Arrow transfer (headliners keep toPandas to
-                # match BASELINE.md's fetchall methodology; the sweep is a
-                # regression watch on compute, not transfer).
-                registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                # noop sink: headliners keep toPandas to match
+                # BASELINE.md's fetchall methodology; the sweep is a
+                # regression watch on compute, not transfer.
+                _noop_save(registry[name].fn(spark, sf_dir))
             except Exception as exc:  # keep the artifact whole; surface the name
                 family_errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 continue
@@ -451,16 +426,18 @@ def main() -> None:
             families, ref.get("families", {}), ref.get("round")
         )
         if isolate:
-            # drift movers join the batch for a clean-JVM number, but
+            # the 10 slowest, then the regression candidates so their
+            # flags get a clean-JVM number; drift movers join too, but
             # CAPPED at 5: the regression gate's confirmation numbers
             # must never be lost to the shared child's 600 s timeout
             # because the drift watch padded the batch
-            out["families_isolated"] = _isolate_slowest(
-                families,
-                extra=list(candidates)
-                + [n for n in drift.get("top_movers", {}) if n not in candidates][:5],
+            slowest = sorted(families, key=families.get, reverse=True)[:10]
+            extra = list(candidates) + [
+                n for n in drift.get("top_movers", {}) if n not in candidates
+            ][:5]
+            iso = out["families_isolated"] = _run_child(
+                "--isolated-child", list(dict.fromkeys(slowest + extra))
             )
-            iso = out["families_isolated"]
             # annotate drift movers with their clean-JVM steady numbers
             # AND a clean ratio — in-sweep ratios on a throttling box
             # read 20-30x while the clean number sits at the reference
@@ -470,16 +447,7 @@ def main() -> None:
                 if iso.get(n, -1.0) > 0:
                     m["iso"] = iso[n]
                     m["ratio_clean"] = round(iso[n] / m["prev"], 2)
-            confirmed = {}
-            for n, sweep_ratio in candidates.items():
-                clean = iso.get(n, -1.0)
-                if clean <= 0:  # isolation failed: keep the in-sweep flag
-                    confirmed[n] = sweep_ratio
-                    continue
-                ratio = round(clean / ref["families"][n], 2)
-                if ratio > 1.5 and clean >= 0.5:
-                    confirmed[n] = ratio
-            candidates = confirmed
+            candidates = confirm(candidates, iso, ref["families"], FAMILY_FLOOR)
         out["regressions"] = candidates
         out["regressions_ref_round"] = ref.get("round")
         if drift:

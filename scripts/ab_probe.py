@@ -14,7 +14,7 @@ numbers are noop-sink timings at shuffle_partitions=8, so any probe
 that doesn't replicate that measures the methodology gap, not the
 query. This version delegates every trial to `bench.py
 --isolated-child`, the exact clean-JVM arm the drift watch itself uses
-(same session conf, same warmup, same noop sink, min-of-2 builds), so
+(same session conf, same warmup, same noop sink, min-of-3 builds), so
 the ratio vs bench_ref is apples-to-apples up to the known iso-vs-sweep
 downward bias (survivors are real, clears are trustworthy).
 

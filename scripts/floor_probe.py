@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import best_of
 from shippinglanes_spark.io import table
 from shippinglanes_spark.registry import all_queries
 from shippinglanes_spark.session import get_spark
@@ -27,12 +27,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def steady(df, n=5):
     df.toPandas()  # cold/plan
-    best = float("inf")
-    for _ in range(n):
-        t0 = time.perf_counter()
-        df.toPandas()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
+    return round(best_of(n, df.toPandas), 4)
 
 
 def fused_funnel(spark, sf_dir):

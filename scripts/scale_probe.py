@@ -3,6 +3,9 @@ ranges) into .tmp/, then time the core operator shapes at 1x and 10x.
 Near-linear wall-time growth on local[32] is the evidence that the plans
 have no accidental O(n²) or driver-side bottleneck. Appends nothing; run
 manually and paste results into SCALING.md.
+
+    python scripts/scale_probe.py          # DEFAULT_NAMES + hand-written shapes
+    python scripts/scale_probe.py --r12    # one round of ROUNDS (or --r15-dials)
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from shippinglanes_spark.io import table
+from shippinglanes_spark.registry import all_queries
 from shippinglanes_spark.session import get_spark
 
 SF = "/root/testdata/sf0.1"
@@ -417,176 +421,77 @@ def _ensure_orders100(spark, sfdir):
     )
 
 
-def round18_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-8 session pack pushed to 100x (the r15/r16 rigor): the
-    customer/orders rollup shapes and the calendar-bounded folds should
-    stay sub-linear; sim_maxsim's pinned query workload makes its cost
-    queries x corpus (linear)."""
-    from shippinglanes_spark.registry import all_queries
+# Registered-query rounds: flag -> (scales, registry names). Every round
+# runs through _time_registered: per scale, per name, one warm build and
+# then one timed build into the noop sink. A round whose scales include
+# "100x" builds the 100-copy scratch first.
+X10 = ("1x", "10x")
+X100 = ("1x", "10x", "100x")
 
-    Q = all_queries()
-    names = [
-        "agg_wilcoxon_signed_rank",
-        "rank_map",
-        "agg_effect_size",
-        "ts_kalman_level",
-        "sim_maxsim",
-        "agg_friedman",
-        "agg_tost_equivalence",
-        "rank_rbo",
-        "pipeline_topp_sources",
-        "ts_holt_winters",
-        "agg_brier_decomposition",
-        "sql_pipe_surface",
-        "ts_croston",
-        "text_heaps_law",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
+# No flag: judge-requested round-3 shapes through their REGISTERED entry
+# points: geo_encounters (space-time grid join), emb_top_pc (single-pass
+# Gram + driver eigensolve), win_distinct_sliding (per-day set rollup +
+# bounded range frame), ts_concurrency (decomposed sweep-line).
+DEFAULT_NAMES = [
+    "geo_encounters",
+    "emb_top_pc",
+    "win_distinct_sliding",
+    "ts_concurrency",
+]
 
+# Round-8 pack: rankings are nation-partition-local windows over one
+# customer/orders rollup; HHI/Lorenz/trimmed-mean are keyed aggregates
+# plus metadata-sized tails; Page-Hinkley is one daily rollup. Expect
+# FLAT to mildly growing (the fact rollups). --r17-100x (VERDICT r8 item
+# 3, the r16/r18 rigor) names the exponents of the two shuffle-linear
+# shapes flagged at 10x: agg_trimmed_mean's per-priority rank pass and
+# evt_seq_support's one-day user-keyed self-join.
+_R17 = [
+    "rank_ndcg",
+    "rank_mrr",
+    "agg_hhi",
+    "agg_lorenz",
+    "agg_trimmed_mean",
+    "ts_page_hinkley",
+    "evt_seq_support",
+    "graph_connected_components",
+    "pipeline_tokenizer_fertility",
+    "text_marker_dominance",
+]
 
-def round21_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-10 session-2 rewrites re-probed (the plans changed, so the
-    committed exponents must be re-earned): text_heaps_law's tokenize-
-    first + fan_out form (fan_out is a no-op on the multi-row-group
-    scratch — only the single-row-group fixture needed it), agg_spearman's
-    fused dual-rank form, and the
-    eager sql_scripting_surface threshold search (expected ~flat: the
-    iteration count tracks the price spread, not the row count)."""
-    from shippinglanes_spark.registry import all_queries
+# Round-8 pack 2: Wilcoxon/MAP/effect-size are one or two keyed fact
+# rollups + nation/region-local windows; Kalman is a per-type
+# calendar-bounded fold; MaxSim is a FIXED query workload (bounded id
+# range) against a growing candidate corpus, so its cost is queries x
+# corpus — linear in data. Expect FLAT to mildly growing.
+_R18 = [
+    "agg_wilcoxon_signed_rank",
+    "rank_map",
+    "agg_effect_size",
+    "ts_kalman_level",
+    "sim_maxsim",
+    "agg_friedman",
+    "agg_tost_equivalence",
+    "rank_rbo",
+    "pipeline_topp_sources",
+]
 
-    Q = all_queries()
-    names = [
-        "text_heaps_law",
-        "agg_spearman",
-        "sql_scripting_surface",
-    ]
-    # pipeline_semdedup is deliberately NOT here: at the FIXTURE k=8 it
-    # is cluster-quadratic by the paper's own design (100x corpus, k
-    # fixed -> ~75k-vector clusters -> 1e10+ pair dots), and its 100x
-    # story is the k dial, measured by --r15-dials (k scaled with the
-    # corpus). This round's change to it was action-count only.
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round22_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-11 changes probed to 100x: text_mattr's last-occurrence
-    lead() rewrite (the plan changed — the committed exponent must be
-    re-earned; expect corpus-linear, it is the declared linear member)
-    and sql_recursive_walk (expect ~linear: iteration count is the max
-    walk length, which is orders-per-customer-bounded and
-    copy-invariant on the disjoint-custkey scratch — only the per-
-    iteration join width grows). source_python_stream is deliberately
-    absent: its input is a synthetic in-process feed, corpus-
-    independent by construction."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = ["text_mattr", "sql_recursive_walk"]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round4_registered(spark, sfdir_1x, sfdir_10x):
-    """Judge-requested round-3 shapes probed through their REGISTERED
-    entry points: geo_encounters (space-time grid join), emb_top_pc
-    (single-pass Gram + driver eigensolve), win_distinct_sliding
-    (per-day set rollup + bounded range frame), ts_concurrency
-    (decomposed sweep-line)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "geo_encounters",
-        "emb_top_pc",
-        "win_distinct_sliding",
-        "ts_concurrency",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round5_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-4 session additions probed through their registered entry
-    points: OHLC resampling + adaptive sessionization (keyed event
-    windows), n-gram novelty (shingle join), incremental fingerprint
-    dedup (fp-keyed join), span corruption (zero-shuffle per-row HOFs)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+ROUNDS = {
+    # Round-4 session additions: OHLC resampling + adaptive
+    # sessionization (keyed event windows), n-gram novelty (shingle
+    # join), incremental fingerprint dedup (fp-keyed join), span
+    # corruption (zero-shuffle per-row HOFs).
+    "--r5": (X10, [
         "ts_resample_ohlc",
         "evt_sessionize_adaptive",
         "text_ngram_novelty",
         "pipeline_incremental_dedup",
         "pipeline_span_corrupt",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round6_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-4 session-2 additions probed through their registered entry
-    points: one-pass moment analytics, A-Res top-k, basket rules,
-    RFM bucketing, paragraph dedup, shard manifest, bounded
-    Bellman-Ford."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-4 session-2 additions: one-pass moment analytics, A-Res
+    # top-k, basket rules, RFM bucketing, paragraph dedup, shard
+    # manifest, bounded Bellman-Ford.
+    "--r6": (X10, [
         "agg_corr_matrix",
         "agg_ols",
         "sample_weighted",
@@ -595,83 +500,35 @@ def round6_registered(spark, sfdir_1x, sfdir_10x):
         "text_dedup_paragraph",
         "pipeline_shard_manifest",
         "graph_weighted_path",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round7_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 probe set (judge-requested r4 joins): PPJoin set-similarity
-    self-join, growth accounting (MAU deltas via keyed month windows),
-    end-to-end LSH dedup pipeline, and the rewritten over-cap-safe
-    text MinHash candidates."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 probe set (judge-requested r4 joins): PPJoin set-similarity
+    # self-join, growth accounting (MAU deltas via keyed month windows),
+    # end-to-end LSH dedup pipeline, and the rewritten over-cap-safe
+    # text MinHash candidates.
+    "--r7": (X10, [
         "join_set_similarity",
         "evt_growth_accounting",
         "pipeline_dedup_end2end",
         "text_minhash_dedup",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round8_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 additions: KM survival + log-rank (keyed agg + bounded
-    day-table folds), GROUPS-frame emulation (stacked windows, one
-    sort), winsorized mean (quantile broadcast), track interpolation
-    (union-grid windows)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 additions: KM survival + log-rank (keyed agg + bounded
+    # day-table folds), GROUPS-frame emulation (stacked windows, one
+    # sort), winsorized mean (quantile broadcast), track interpolation
+    # (union-grid windows).
+    "--r8": (X10, [
         "evt_survival_km",
         "evt_logrank",
         "win_groups_frame",
         "agg_winsorized_mean",
         "geo_track_interp",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round9_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 session-2 additions: hamming retrieval (map-side XOR +
-    two-phase top-k), rolling correlation (one keyed frame, six moment
-    sums), RRF fusion (two TakeOrdered shortlists), Holt smoothing
-    (in-group fold), DP histogram (keyed distinct + per-row noise),
-    link prediction (graph-sized after first groupBy — included to
-    confirm the data-sized stage dominates and scales linearly)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 session-2 additions: hamming retrieval (map-side XOR +
+    # two-phase top-k), rolling correlation (one keyed frame, six moment
+    # sums), RRF fusion (two TakeOrdered shortlists), Holt smoothing
+    # (in-group fold), DP histogram (keyed distinct + per-row noise),
+    # link prediction (graph-sized after first groupBy — included to
+    # confirm the data-sized stage dominates and scales linearly).
+    "--r9": (X10, [
         "emb_hamming_topk",
         "win_rolling_corr",
         "sim_rrf_fusion",
@@ -679,32 +536,16 @@ def round9_registered(spark, sfdir_1x, sfdir_10x):
         "pipeline_dp_histogram",
         "graph_link_prediction",
         "agg_hll_intersection",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round10_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 session-3 additions: the iterative trio (Markov power
-    iteration, k-core peeling, closeness BFS — all graph-sized after
-    one data-sized aggregation, probed to confirm that stage
-    dominates), Poisson bootstrap (40x map-side fanout, 40-key
-    shuffle), log-odds (word-count shape), bloom-prefilter join
-    (probe-side bit test before the join shuffle), chi-square +
-    DiD (bounded-cell folds), Theil-Sen (corpus -> calendar grid),
-    and quantized k-means (k x corpus distance aggregation)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 session-3 additions: the iterative trio (Markov power
+    # iteration, k-core peeling, closeness BFS — all graph-sized after
+    # one data-sized aggregation, probed to confirm that stage
+    # dominates), Poisson bootstrap (40x map-side fanout, 40-key
+    # shuffle), log-odds (word-count shape), bloom-prefilter join
+    # (probe-side bit test before the join shuffle), chi-square + DiD
+    # (bounded-cell folds), Theil-Sen (corpus -> calendar grid), and
+    # quantized k-means (k x corpus distance aggregation).
+    "--r10": (X10, [
         "evt_markov_stationary",
         "graph_kcore",
         "graph_closeness",
@@ -715,32 +556,16 @@ def round10_registered(spark, sfdir_1x, sfdir_10x):
         "evt_did",
         "ts_theil_sen",
         "emb_kmeans_iters",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round11_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 session-3 batches 4-8: CDC log compaction (keyed window
-    + left join), interval coalescing (two stacked keyed windows),
-    tolerance as-of (union-window carry), stickiness (7x grid
-    explosion + two distinct counts), multiset ops, Bollinger/CUSUM/
-    peaks (grid windows after one corpus agg), modularity +
-    assortativity (graph-sized after edge agg), langid eval (map pass
-    + class-sized confusion reduce), simhash (60 wide conditional
-    sums, one pass)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 session-3 batches 4-8: CDC log compaction (keyed window +
+    # left join), interval coalescing (two stacked keyed windows),
+    # tolerance as-of (union-window carry), stickiness (7x grid
+    # explosion + two distinct counts), multiset ops, Bollinger/CUSUM/
+    # peaks (grid windows after one corpus agg), modularity +
+    # assortativity (graph-sized after edge agg), langid eval (map pass
+    # + class-sized confusion reduce), simhash (60 wide conditional
+    # sums, one pass).
+    "--r11": (X10, [
         "etl_cdc_apply",
         "evt_interval_merge",
         "join_asof_tolerance",
@@ -754,59 +579,27 @@ def round11_registered(spark, sfdir_1x, sfdir_10x):
         "pipeline_langid_eval",
         "text_simhash",
         "agg_ratio_delta_ci",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round12_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 session-4 additions: runs test + power-law MLE (corpus
-    -> grid/histogram, then constant-size math), containment join
-    (prefix-probe vs full inverted index — THE shape to watch: the
-    host side is corpus-linear by design, candidates track shared
-    shingles), dup-span mining (one window explode + map-side-combined
-    span counts)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 session-4 additions: runs test + power-law MLE (corpus ->
+    # grid/histogram, then constant-size math), containment join
+    # (prefix-probe vs full inverted index — THE shape to watch: the
+    # host side is corpus-linear by design, candidates track shared
+    # shingles), dup-span mining (one window explode + map-side-combined
+    # span counts).
+    "--r12": (X10, [
         "agg_runs_test",
         "agg_powerlaw_fit",
         "join_set_containment",
         "text_dup_spans",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round13_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-5 session-5 additions: geohash (map-side integer encode +
-    one cell-keyed agg), random walks / node2vec pairs (one corpus
-    edge pass, then graph-sized iterations — expect FLAT), Kendall tau
-    (corpus -> daily grid -> calendar-bounded pairs), Kruskal-Wallis
-    / Levene (corpus -> distinct-value table, checkpointed single
-    pass), McNemar (two stacked keyed aggregates), PACF (corpus ->
-    daily grid -> one 18-sum aggregate)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-5 session-5 additions: geohash (map-side integer encode + one
+    # cell-keyed agg), random walks / node2vec pairs (one corpus edge
+    # pass, then graph-sized iterations — expect FLAT), Kendall tau
+    # (corpus -> daily grid -> calendar-bounded pairs), Kruskal-Wallis /
+    # Levene (corpus -> distinct-value table, checkpointed single pass),
+    # McNemar (two stacked keyed aggregates), PACF (corpus -> daily
+    # grid -> one 18-sum aggregate).
+    "--r13": (X10, [
         "geo_geohash",
         "graph_random_walks",
         "graph_node2vec_pairs",
@@ -832,93 +625,170 @@ def round13_registered(spark, sfdir_1x, sfdir_10x):
         "graph_transitivity",
         "geo_heading_rose",
         "evt_burstiness",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-def round14_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-6 additions: one-pass moment/tail stats over the daily
-    grid (expect FLAT — corpus work is one keyed rollup), iterative
-    graph ops (node-sized rank tables — FLAT), DSIR (two corpus
-    passes + 1024-row broadcast), CKA (mapInPandas int64 Gram
-    partials), per-vessel track ops (one keyed window each)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
+    ]),
+    # Round-6 additions: one-pass moment/tail stats over the daily grid
+    # (expect FLAT — corpus work is one keyed rollup), iterative graph
+    # ops (node-sized rank tables — FLAT), DSIR (two corpus passes +
+    # 1024-row broadcast), CKA (mapInPandas int64 Gram partials),
+    # per-vessel track ops (one keyed window each).
+    "--r14": (X10, [
         "agg_jarque_bera", "agg_theil", "agg_bh_fdr", "agg_eb_shrinkage",
         "agg_fisher_exact", "agg_extreme_value", "agg_ipf_raking",
         "agg_tail_dependence", "profile_k_anonymity",
         "ts_xcorr_lags", "ts_granger", "ts_sax", "ts_interrupted",
-        "ts_adf", "ts_cointegration", "ts_fourier_profile", "ts_control_chart", "graph_conductance", "evt_markov_entropy",
+        "ts_adf", "ts_cointegration", "ts_fourier_profile",
+        "ts_control_chart", "graph_conductance", "evt_markov_entropy",
         "graph_hits", "graph_label_propagation",
         "pipeline_dsir", "emb_cka", "emb_mmd",
         "geo_route_deviation", "geo_point_in_polygon",
         "geo_line_crossings", "evt_attribution_shapley",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s")
-    return out
-
-
-
-def round15_tail_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """VERDICT r6 item 4: the isolated-slowest tail probed to 100x.
-
-    - PPJoin family / containment-LSH / geo_convoys / stream_join_outer
-      run through their registered entries at 1x/10x/100x; the expected
-      exponent is ~linear (salted shingle spaces, disjoint keys, 35-day
-      shifts keep collision structure per-copy).
-    - pipeline_semdedup is CLUSTER-QUADRATIC at fixed k by the paper's
-      design, so the registered entry (fixture k) is probed at 10x only
-      and the 100x row runs the LIBRARY path with the documented dial
-      applied (k scaled with the corpus so mean cluster size stays
-      constant) — the redesign-that-makes-it-linear, measured.
-    - join_entity_resolution with the FIXED demo blocking key set is
-      quadratic-per-block by construction (125 blocks at any corpus
-      size); its 100x row applies the documented dial — a finer
-      blocking key set — through the same pipeline.
-    """
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    linear_names = [
+    ]),
+    # VERDICT r6 item 4: the isolated-slowest tail probed to 100x
+    # through the registered entries. Expected exponent ~linear: salted
+    # shingle spaces, disjoint keys and 35-day shifts keep the collision
+    # structure per-copy. pipeline_semdedup is cluster-quadratic at its
+    # fixture k by design; its dial row is --r15-dials.
+    "--r15": (X100, [
         "join_set_similarity",
         "join_set_containment",
         "join_containment_lsh",
         "geo_convoys",
         "stream_join_outer",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in linear_names:
+    ]),
+    # Round-7 additions: the four aggregates are one keyed daily/user
+    # rollup plus a calendar- or decile-bounded tail — expect FLAT.
+    "--r16": (X10, [
+        "agg_calibration_bins",
+        "agg_capture_recapture",
+        "agg_sprt",
+        "ts_wma_crossover",
+        "join_entity_resolution",
+    ]),
+    # VERDICT r7 item 4: the round-7 additions pushed to 100x. All are
+    # events-driven; at 100x the calendar spans ~9.6 years (100 copies x
+    # 35-day shift), so the calendar-bounded shapes (matrix profile,
+    # DTW) get their honest long-calendar test. ts_dtw_banded rides
+    # along as the round-8 dial demonstration: the band makes DTW
+    # calendar-LINEAR (days*w), so it runs at 100x where exact ts_dtw
+    # (days^2: ~12M cells/pair at 3.5k days) is run at 10x only.
+    "--r16-100x": (X100, [
+        "agg_calibration_bins",
+        "agg_capture_recapture",
+        "agg_sprt",
+        "ts_wma_crossover",
+        "geo_cpa",
+        "ts_matrix_profile",
+        "ts_dtw_banded",
+    ]),
+    "--r17": (X10, _R17),
+    "--r17-100x": (X100, _R17),
+    "--r18": (X10, _R18),
+    # The round-8 session pack pushed to 100x (the r15/r16 rigor): the
+    # customer/orders rollup shapes and the calendar-bounded folds should
+    # stay sub-linear; sim_maxsim's pinned query workload makes its cost
+    # queries x corpus (linear).
+    "--r18-100x": (X100, _R18 + [
+        "ts_holt_winters",
+        "agg_brier_decomposition",
+        "sql_pipe_surface",
+        "ts_croston",
+        "text_heaps_law",
+    ]),
+    # Round-9 pack: BT and the reliability/whiteness tests are one daily
+    # rollup + single-row or calendar-sized folds; ERR is a customer
+    # rollup + nation-local top-10 folds; the trend test is a
+    # zero-shuffle moment pass; self-BLEU is trigram-explode map work +
+    # (lang, trigram)-keyed aggregation — the only corpus-shaped shuffle
+    # in the pack.
+    "--r19-100x": (X100, [
+        "rank_bradley_terry",
+        "rank_err",
+        "ts_ljung_box",
+        "agg_cronbach_alpha",
+        "agg_cochran_armitage",
+        "text_self_bleu",
+        "agg_isotonic_calibration",
+        "pipeline_preference_pairs",
+    ]),
+    # Round-10 packs. AD and SampEn pin their analysis window (first 30
+    # days / 720 hours — the production monitoring semantics), so even
+    # though the 100x fixture's 35-day-shifted copies stretch the
+    # CALENDAR ~100x, their grid/self-join work stays constant and only
+    # the keyed rollup grows (unwindowed, AD's exact terms overflowed
+    # BIGINT at the 3500-day pooled N and SampEn's spine self-join went
+    # calendar-quadratic — the windowing is the fix, not a cosmetic).
+    # VR / turning points / CIF do calendar-LINEAR tail work and run
+    # unwindowed; VIF / Deming / partial corr are zero-shuffle moment
+    # passes; MATTR is corpus-linear fan-out; exposure a TakeOrdered
+    # top-100; VARIANT scan-shaped; listagg dim-sized; the SQL
+    # session-state chain a plain aggregate.
+    "--r20-100x": (X100, [
+        "agg_anderson_darling",
+        "agg_vif",
+        "agg_deming",
+        "ts_sample_entropy",
+        "text_mattr",
+        "rank_exposure",
+        "fn_variant_nested",
+        "agg_listagg",
+        "ts_variance_ratio",
+        "ts_turning_points",
+        "agg_partial_correlation",
+        "text_entropy_rate",
+        "evt_cumulative_incidence",
+        "sql_variables_exec",
+        "agg_hodges_lehmann",
+        "text_chao1",
+        "emb_jl_projection",
+        "pipeline_pair_rouge",
+        "ts_ses_select",
+        "profile_key_candidates",
+    ]),
+    # Round-10 session-2 rewrites re-probed (the plans changed, so the
+    # committed exponents must be re-earned): text_heaps_law's tokenize-
+    # first + fan_out form (fan_out is a no-op on the multi-row-group
+    # scratch — only the single-row-group fixture needed it),
+    # agg_spearman's fused dual-rank form, and the eager
+    # sql_scripting_surface threshold search (expected ~flat: the
+    # iteration count tracks the price spread, not the row count).
+    # pipeline_semdedup is deliberately NOT here: at the FIXTURE k=8 it
+    # is cluster-quadratic by the paper's own design (100x corpus, k
+    # fixed -> ~75k-vector clusters -> 1e10+ pair dots), and its 100x
+    # story is the k dial, measured by --r15-dials (k scaled with the
+    # corpus). This round's change to it was action-count only.
+    "--r21-100x": (X100, [
+        "text_heaps_law",
+        "agg_spearman",
+        "sql_scripting_surface",
+    ]),
+    # Round-11 changes: text_mattr's last-occurrence lead() rewrite (the
+    # plan changed — the committed exponent must be re-earned; expect
+    # corpus-linear, it is the declared linear member) and
+    # sql_recursive_walk (expect ~linear: iteration count is the max
+    # walk length, which is orders-per-customer-bounded and
+    # copy-invariant on the disjoint-custkey scratch — only the
+    # per-iteration join width grows). source_python_stream is
+    # deliberately absent: its input is a synthetic in-process feed,
+    # corpus-independent by construction.
+    "--r22-100x": (X100, ["text_mattr", "sql_recursive_walk"]),
+}
+
+# The one round that calls the library with a dial instead of timing
+# registered entries (round15_dials_100x).
+DIALS_FLAG = "--r15-dials"
+
+
+def _time_registered(spark, scales, names):
+    """Per (label, sf_dir) in `scales`, per registered query in `names`:
+    one warm build, then one timed build, both into the noop sink."""
+    Q = all_queries()
+    for label, sfdir in scales:
+        for name in names:
             fn = Q[name].fn
             fn(spark, sfdir).write.format("noop").mode("overwrite").save()
             t0 = time.perf_counter()
             fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
+            print(f"{label} {name}: {time.perf_counter() - t0:.3f}s", flush=True)
 
 
 def round15_dials_100x(spark, sfdir_1x, sfdir_100x):
@@ -942,341 +812,23 @@ def round15_dials_100x(spark, sfdir_1x, sfdir_100x):
     return out
 
 
-def round16_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-7 additions: all four are one keyed daily/user rollup plus
-    a calendar- or decile-bounded tail — expect FLAT."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "agg_calibration_bins",
-        "agg_capture_recapture",
-        "agg_sprt",
-        "ts_wma_crossover",
-        "join_entity_resolution",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round16_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """VERDICT r7 item 4: the round-7 additions pushed to 100x — the
-    same rigor the r15 tail set got. All are events-driven; at 100x the
-    calendar spans ~9.6 years (100 copies x 35-day shift), so the
-    calendar-bounded shapes (matrix profile, DTW) get their honest
-    long-calendar test. ts_dtw_banded rides along as the round-8 dial
-    demonstration: the band makes DTW calendar-LINEAR (days*w), so it
-    runs at 100x where exact ts_dtw (days^2: ~12M cells/pair at 3.5k
-    days) is run at 10x only — the measured before/after of the dial."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "agg_calibration_bins",
-        "agg_capture_recapture",
-        "agg_sprt",
-        "ts_wma_crossover",
-        "geo_cpa",
-        "ts_matrix_profile",
-        "ts_dtw_banded",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round17_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-8 pack: rankings are nation-partition-local windows over
-    one customer/orders rollup; HHI/Lorenz/trimmed-mean are keyed
-    aggregates plus metadata-sized tails; Page-Hinkley is one daily
-    rollup. Expect FLAT to mildly growing (the fact rollups)."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "rank_ndcg",
-        "rank_mrr",
-        "agg_hhi",
-        "agg_lorenz",
-        "agg_trimmed_mean",
-        "ts_page_hinkley",
-        "evt_seq_support",
-        "graph_connected_components",
-        "pipeline_tokenizer_fertility",
-        "text_marker_dominance",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round17_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-8 pack pushed to 100x (VERDICT r8 item 3 — match the
-    r16/r18 rigor): the keyed fact rollups should stay sub-linear;
-    the two shuffle-linear shapes flagged at 10x (agg_trimmed_mean's
-    per-priority rank pass, evt_seq_support's one-day user-keyed
-    self-join) get their exponents named here."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "rank_ndcg",
-        "rank_mrr",
-        "agg_hhi",
-        "agg_lorenz",
-        "agg_trimmed_mean",
-        "ts_page_hinkley",
-        "evt_seq_support",
-        "graph_connected_components",
-        "pipeline_tokenizer_fertility",
-        "text_marker_dominance",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round19_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-9 pack at 1x/10x/100x: BT and the reliability/whiteness
-    tests are one daily rollup + single-row or calendar-sized folds;
-    ERR is a customer rollup + nation-local top-10 folds; the trend
-    test is a zero-shuffle moment pass; self-BLEU is trigram-explode
-    map work + (lang, trigram)-keyed aggregation — the only
-    corpus-shaped shuffle in the pack."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "rank_bradley_terry",
-        "rank_err",
-        "ts_ljung_box",
-        "agg_cronbach_alpha",
-        "agg_cochran_armitage",
-        "text_self_bleu",
-        "agg_isotonic_calibration",
-        "pipeline_preference_pairs",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round20_100x(spark, sfdir_1x, sfdir_10x, sfdir_100x):
-    """Round-10 packs at 1x/10x/100x. AD and SampEn pin their analysis
-    window (first 30 days / 720 hours — the production monitoring
-    semantics), so even though the 100x fixture's 35-day-shifted
-    copies stretch the CALENDAR ~100x, their grid/self-join work stays
-    constant and only the keyed rollup grows (the first probe cut of
-    this round ran them UNwindowed: AD's exact terms overflowed BIGINT
-    at the 3500-day pooled N and SampEn's spine self-join went
-    calendar-quadratic — the windowing is the fix, not a cosmetic).
-    VR / turning points / CIF do calendar-LINEAR tail work and run
-    unwindowed; VIF / Deming / partial corr are zero-shuffle moment
-    passes; MATTR is corpus-linear fan-out; exposure a TakeOrdered
-    top-100; VARIANT scan-shaped; listagg dim-sized; the SQL
-    session-state chain a plain aggregate."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "agg_anderson_darling",
-        "agg_vif",
-        "agg_deming",
-        "ts_sample_entropy",
-        "text_mattr",
-        "rank_exposure",
-        "fn_variant_nested",
-        "agg_listagg",
-        "ts_variance_ratio",
-        "ts_turning_points",
-        "agg_partial_correlation",
-        "text_entropy_rate",
-        "evt_cumulative_incidence",
-        "sql_variables_exec",
-        "agg_hodges_lehmann",
-        "text_chao1",
-        "emb_jl_projection",
-        "pipeline_pair_rouge",
-        "ts_ses_select",
-        "profile_key_candidates",
-    ]
-    out = {}
-    for label, sfdir in (
-        ("1x", sfdir_1x),
-        ("10x", sfdir_10x),
-        ("100x", sfdir_100x),
-    ):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
-def round18_registered(spark, sfdir_1x, sfdir_10x):
-    """Round-8 pack 2: Wilcoxon/MAP/effect-size are one or two keyed
-    fact rollups + nation/region-local windows; Kalman is a per-type
-    calendar-bounded fold; MaxSim is a FIXED query workload (bounded id
-    range) against a growing candidate corpus, so its cost is
-    queries x corpus — linear in data. Expect FLAT to mildly growing."""
-    from shippinglanes_spark.registry import all_queries
-
-    Q = all_queries()
-    names = [
-        "agg_wilcoxon_signed_rank",
-        "rank_map",
-        "agg_effect_size",
-        "ts_kalman_level",
-        "sim_maxsim",
-        "agg_friedman",
-        "agg_tost_equivalence",
-        "rank_rbo",
-        "pipeline_topp_sources",
-    ]
-    out = {}
-    for label, sfdir in (("1x", sfdir_1x), ("10x", sfdir_10x)):
-        for name in names:
-            fn = Q[name].fn
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sfdir).write.format("noop").mode("overwrite").save()
-            out[f"{label} {name}"] = time.perf_counter() - t0
-            print(f"{label} {name}: {out[f'{label} {name}']:.3f}s", flush=True)
-    return out
-
-
 def main() -> None:
     spark = get_spark(app_name="scale-probe", shuffle_partitions=32)
     build(spark)
     build_docs(spark)
     sfdir10 = build_sfdir(spark)
-    if "--r18" in sys.argv:
-        round18_registered(spark, SF, sfdir10)
+    if DIALS_FLAG in sys.argv:
+        round15_dials_100x(spark, SF, build_sfdir100(spark))
         return
-    if "--r18-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round18_100x(spark, SF, sfdir10, sfdir100)
+    flag = next((f for f in ROUNDS if f in sys.argv), None)
+    if flag is not None:
+        scales, names = ROUNDS[flag]
+        dirs = {"1x": SF, "10x": sfdir10}
+        if "100x" in scales:
+            dirs["100x"] = build_sfdir100(spark)
+        _time_registered(spark, [(s, dirs[s]) for s in scales], names)
         return
-    if "--r17" in sys.argv:
-        round17_registered(spark, SF, sfdir10)
-        return
-    if "--r22-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round22_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r21-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round21_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r19-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round19_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r20-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round20_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r17-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round17_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r16" in sys.argv:
-        round16_registered(spark, SF, sfdir10)
-        return
-    if "--r16-100x" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round16_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r15" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round15_tail_100x(spark, SF, sfdir10, sfdir100)
-        return
-    if "--r15-dials" in sys.argv:
-        sfdir100 = build_sfdir100(spark)
-        round15_dials_100x(spark, SF, sfdir100)
-        return
-    if "--r14" in sys.argv:
-        round14_registered(spark, SF, sfdir10)
-        return
-    if "--r13" in sys.argv:
-        round13_registered(spark, SF, sfdir10)
-        return
-    if "--r12" in sys.argv:
-        round12_registered(spark, SF, sfdir10)
-        return
-    if "--r11" in sys.argv:
-        round11_registered(spark, SF, sfdir10)
-        return
-    if "--r10" in sys.argv:
-        round10_registered(spark, SF, sfdir10)
-        return
-    if "--r9" in sys.argv:
-        round9_registered(spark, SF, sfdir10)
-        return
-    if "--r8" in sys.argv:
-        round8_registered(spark, SF, sfdir10)
-        return
-    if "--r7" in sys.argv:
-        round7_registered(spark, SF, sfdir10)
-        return
-    if "--r6" in sys.argv:
-        round6_registered(spark, SF, sfdir10)
-        return
-    if "--r5" in sys.argv:
-        round5_registered(spark, SF, sfdir10)
-        return
-    round4_registered(spark, SF, sfdir10)
+    _time_registered(spark, [("1x", SF), ("10x", sfdir10)], DEFAULT_NAMES)
     one = {
         "ev": table(spark, SF, "events"),
         "li": table(spark, SF, "lineitem"),

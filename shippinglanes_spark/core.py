@@ -59,9 +59,9 @@ def fan_out(df, min_partitions: int | None = None):
 FAN_OUT_TASK_BYTES = 256 << 10
 
 
-def fan_out_scaled(df, bytes_per_task: int | None = None):
+def fan_out_scaled(df):
     """fan_out with the width derived from the INPUT SIZE instead of the
-    core count: ceil(estimated bytes / bytes_per_task) clamped to
+    core count: ceil(estimated bytes / FAN_OUT_TASK_BYTES) clamped to
     [2, defaultParallelism].
 
     Why: a width of defaultParallelism turns a tiny relation into 32
@@ -70,23 +70,30 @@ def fan_out_scaled(df, bytes_per_task: int | None = None):
     (0.048 s @8 vs 0.235 s @32 on identical code; guide §2.6). A
     work-derived width is the same at ANY core count (no inversion by
     construction) and still reaches full parallelism on large inputs,
-    where estimated bytes / bytes_per_task exceeds the clamp."""
-    bytes_per_task = bytes_per_task or FAN_OUT_TASK_BYTES
+    where estimated bytes / FAN_OUT_TASK_BYTES exceeds the clamp.
+
+    Below the clamp the input is repartitioned to `width` without
+    looking at its native split count, so an input read from more
+    splits than `width` is repartitioned DOWN to `width`. That is
+    harmless: the width already gives every task about
+    FAN_OUT_TASK_BYTES of input, so the extra native splits were
+    smaller than one task's worth of work and merging them only drops
+    per-task overhead. The keyless repartition shuffles an input
+    estimated below defaultParallelism * FAN_OUT_TASK_BYTES and changes
+    no row's value, only which task computes it."""
     sc = df.sparkSession.sparkContext
     cap = sc.defaultParallelism
     try:
         est = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-        width = max(2, min(cap, -(-est // bytes_per_task)))
+        width = max(2, min(cap, -(-est // FAN_OUT_TASK_BYTES)))
     except Exception:  # stats unavailable (exotic plan): previous behavior
         width = cap
     if width < cap:
         # small input: the stats already made the decision — skip
         # fan_out's df.rdd.getNumPartitions() probe, which costs a
         # second plan materialization per build (~0.1-0.2 s of py4j
-        # round-trips at fixture scale). An input this small cannot
-        # meaningfully exceed `width` native splits, and a keyless
-        # repartition of a handful of partitions is harmless.
+        # round-trips at fixture scale).
         return df.repartition(width)
     return fan_out(df, width)

@@ -413,35 +413,7 @@ def graph_link_prediction(spark, sf_dir):
     wedge join is the standard two-path enumeration bounded by
     orienting on degree; every relation after the first groupBy is
     graph-sized, so nothing here grows with the fact table."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-
-    e = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(c.c_nationkey != s.s_nationkey)
-        .groupBy(c.c_nationkey.alias("src"), s.s_nationkey.alias("dst"))
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        .localCheckpoint()
-    )
-    tot = e.agg(
-        F.sum("w").cast("long").alias("tw"),
-        F.count(F.lit(1)).cast("long").alias("ne"),
-    )
-    und = (
-        e.join(F.broadcast(tot))
-        # above-average links via exact integer cross-multiply: w >= tw/ne
-        .where(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _trade_und(spark, sf_dir)
     nbr = und.select(F.col("a").alias("v"), F.col("b").alias("w")).unionByName(
         und.select(F.col("b").alias("v"), F.col("a").alias("w"))
     )
@@ -478,9 +450,9 @@ def graph_link_prediction(spark, sf_dir):
 
 def _trade_und(spark, sf_dir):
     """Above-average-weight undirected nation trade edges (a, b), a < b —
-    the single data-sized pass shared by graph_kcore / graph_closeness
-    (and mirrored by graph_link_prediction's inline copy). Returns a
-    localCheckpointed graph-sized relation."""
+    the single data-sized pass shared by graph_kcore / graph_closeness /
+    graph_link_prediction. Returns a localCheckpointed graph-sized
+    relation."""
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
@@ -501,6 +473,7 @@ def _trade_und(spark, sf_dir):
     )
     return (
         e.join(F.broadcast(tot))
+        # above-average links via exact integer cross-multiply: w >= tw/ne
         .where(F.col("w") * F.col("ne") >= F.col("tw"))
         .select(
             F.least("src", "dst").alias("a"),

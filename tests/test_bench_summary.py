@@ -201,3 +201,28 @@ def test_summary_bounded_even_when_every_headliner_fails():
     # under this error load the drift verdict degraded to pct + pointer
     # rather than pushing the line past the capture
     assert s["families_drift"] == {"pct": 12.5, "movers": "see bench_full.json"}
+
+
+def test_confirm_rejudges_flags_on_clean_jvm_numbers():
+    """Both gates re-judge their sampled flags on the clean-JVM child's
+    numbers: a failed isolation keeps the sampled flag, a clean ratio
+    <= 1.5 or a clean time under the gate's floor clears it, and a
+    survivor reports the clean ratio."""
+    from bench import FAMILY_FLOOR, HEADLINE_FLOOR, confirm
+
+    ref = {"failed": 1.0, "missing": 1.0, "flat": 1.0, "held": 1.0}
+    sampled = {"failed": 3.0, "missing": 2.5, "flat": 2.0, "held": 1.8}
+    iso = {"failed": -1.0, "flat": 1.5, "held": 1.6}
+    # "flat" reads 1.5x clean, not > 1.5: cleared
+    assert confirm(sampled, iso, ref, FAMILY_FLOOR) == {
+        "failed": 3.0,   # isolation failed: sampled flag kept
+        "missing": 2.5,  # absent from the child's output: kept too
+        "held": 1.6,     # clean 1.6x still > 1.5: clean ratio reported
+    }
+    # a clean time under the floor clears even a large clean ratio
+    assert confirm({"q": 9.0}, {"q": 0.09}, {"q": 0.03}, HEADLINE_FLOOR) == {}
+    # the floors: 0.1 s for headliners, 0.5 s for families — a 0.3 s
+    # clean time at 3x survives the first and is cleared by the second
+    assert (HEADLINE_FLOOR, FAMILY_FLOOR) == (0.1, 0.5)
+    assert confirm({"q": 4.0}, {"q": 0.3}, {"q": 0.1}, HEADLINE_FLOOR) == {"q": 3.0}
+    assert confirm({"q": 4.0}, {"q": 0.3}, {"q": 0.1}, FAMILY_FLOOR) == {}
