@@ -1,7 +1,8 @@
 """Job-floor investigation (VERDICT r7 item 5): measure the 4 headline
 queries stuck above 2x vs DuckDB at ~40-60 ms absolute, against
 candidate single-action rewrites and against the measured Spark
-single-job floor and per-task Python floor.
+single-job floor, per-task Python floor and one-batch stateful
+streaming drain floor.
 
 Methodology mirrors bench.py's steady-state: one warm session, same
 DataFrame handle re-executed (plan reused), min of N, toPandas().
@@ -11,7 +12,9 @@ Run manually; paste conclusions into BASELINE.md / bench.py notes.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -21,6 +24,7 @@ from bench import best_of
 from shippinglanes_spark.io import table
 from shippinglanes_spark.registry import all_queries
 from shippinglanes_spark.session import get_spark
+from shippinglanes_spark.streaming.lift import _drain
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -28,6 +32,21 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def steady(df, n=5):
     df.toPandas()  # cold/plan
     return round(best_of(n, df.toPandas), 4)
+
+
+def stateful_drain_floor(spark, n=5):
+    """Min wall seconds of a one-batch stateful availableNow drain of a
+    one-row file at one state partition (a 0-byte bounded input): the
+    fixed cost of one micro-batch with a state store, which every
+    stream_* drain pays per batch whatever its row count."""
+    src = tempfile.mkdtemp(prefix="floor_drain_")
+    try:
+        spark.range(1).write.mode("overwrite").parquet(src)
+        agg = spark.readStream.schema("id long").parquet(src).groupBy("id").count()
+        _drain(agg, "floor_drain", "complete", 0)  # cold/plan
+        return round(best_of(n, lambda: _drain(agg, "floor_drain", "complete", 0)), 4)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def fused_funnel(spark, sf_dir):
@@ -96,6 +115,8 @@ def main():
     print("floor range(1):", steady(floor_df))
     print("floor range(1), one task:", steady(one_task))
     print("floor python task (1-row mapInArrow):", steady(py_floor_df))
+    print("floor stateful drain (1 row, 1 batch, 1 state partition):",
+          stateful_drain_floor(spark))
     print("floor nation-agg:", steady(nation))
     for name in ("agg_pivot", "fn_json", "evt_funnel", "set_intersect"):
         print(f"{name} current:", steady(Q[name].fn(spark, SF)))

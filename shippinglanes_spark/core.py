@@ -59,6 +59,32 @@ def fan_out(df, min_partitions: int | None = None):
 FAN_OUT_TASK_BYTES = 256 << 10
 
 
+def input_width(spark, bounded_input, floor: int = 1) -> int:
+    """One task per FAN_OUT_TASK_BYTES of input: ceil(input bytes /
+    FAN_OUT_TASK_BYTES) clamped to [floor, defaultParallelism].
+
+    ``bounded_input`` is a byte count, or a DataFrame whose optimized
+    plan's size estimate is the byte count (for a file scan, the files'
+    on-disk size). A plan without a usable estimate gets
+    defaultParallelism."""
+    cap = spark.sparkContext.defaultParallelism
+    if isinstance(bounded_input, int):
+        n_bytes = bounded_input
+    else:
+        try:
+            n_bytes = int(
+                str(
+                    bounded_input._jdf.queryExecution()
+                    .optimizedPlan()
+                    .stats()
+                    .sizeInBytes()
+                )
+            )
+        except Exception:  # stats unavailable (exotic plan)
+            return cap
+    return max(floor, min(cap, -(-n_bytes // FAN_OUT_TASK_BYTES)))
+
+
 def fan_out_scaled(df):
     """fan_out with the width derived from the INPUT SIZE instead of the
     core count: ceil(estimated bytes / FAN_OUT_TASK_BYTES) clamped to
@@ -81,15 +107,8 @@ def fan_out_scaled(df):
     per-task overhead. The keyless repartition shuffles an input
     estimated below defaultParallelism * FAN_OUT_TASK_BYTES and changes
     no row's value, only which task computes it."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism
-    try:
-        est = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        width = max(2, min(cap, -(-est // FAN_OUT_TASK_BYTES)))
-    except Exception:  # stats unavailable (exotic plan): previous behavior
-        width = cap
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    width = input_width(df.sparkSession, df, floor=2)
     if width < cap:
         # small input: the stats already made the decision — skip
         # fan_out's df.rdd.getNumPartitions() probe, which costs a

@@ -17,6 +17,8 @@ from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import SparkSession
 
+from .core import input_width
+
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime confs applied to ANY session that runs engine queries (including a
@@ -63,19 +65,20 @@ def pinned_confs(spark: SparkSession, confs: dict[str, str]):
                 pass
 
 
-def stream_partitions(spark: SparkSession, n: int = 8):
+def stream_partitions(spark: SparkSession, bounded_input):
     """Pin ``spark.sql.shuffle.partitions`` for the duration of a
     streaming drain, then restore the caller's value.
 
     A streaming query captures its state-store partition count from this
-    conf at query START and keeps it for the life of the checkpoint. A
-    plain driver session runs the 200-partition default, so every
-    micro-batch of a fixture-scale drain dispatches 200 state tasks —
-    measured as most of stream_join_outer's ~5 s. Batch plans are
-    untouched: the previous value is restored after the drain (and on a
-    real cluster the state partition count should instead be sized to
-    executor count x a small factor at the first deployment of each
-    checkpoint)."""
+    conf at query START and keeps it for the life of the checkpoint, and
+    every micro-batch runs one state load/commit task per partition. The
+    count follows one rule, the one ``core.fan_out_scaled`` uses: one
+    partition per ``core.FAN_OUT_TASK_BYTES`` of the drain's bounded
+    input, clamped to [1, defaultParallelism] (``core.input_width``).
+    ``bounded_input`` is the batch DataFrame over the files the stream
+    drains, or the feed's size in bytes. Batch plans are untouched: the
+    previous value is restored after the drain."""
+    n = input_width(spark, bounded_input)
     return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 

@@ -511,16 +511,13 @@ def sink_dynamic_overwrite(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     out = _scratch(f"sink_dynover_{os.path.basename(sf_dir.rstrip('/'))}")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-        backfill = o.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
-            "cents", F.col("cents") * 2
-        )
-        backfill.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    backfill = o.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
+        "cents", F.col("cents") * 2
+    )
+    for df in (o, backfill):
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("o_orderpriority").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..core import as_date, money
 from ..registry import register
-from ..session import apply_runtime_confs
+from ..session import apply_runtime_confs, stream_partitions
 
 
 def compact(
@@ -72,9 +72,10 @@ def incremental_rollup(
     when one day's events arrive across many micro-batches. Deltas keep
     raw (unrounded) sums: rounding happens once at read time, because
     round-then-sum of partials diverges from sum-then-round of the whole.
-    Returns the streaming query (caller awaits termination)."""
+    Drains every file present (availableNow) with the shuffle partitions
+    sized from the input (session.stream_partitions) and returns the
+    finished streaming query."""
     apply_runtime_confs(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     static = spark.read.option("pathGlobFilter", glob).parquet(src_dir)
     stream = (
         spark.readStream.schema(static.schema)
@@ -93,15 +94,21 @@ def incremental_rollup(
             F.count(F.lit(1)).alias("n"),
             F.sum("value").alias("sum_value"),
         ).withColumn("batch", F.lit(batch_id))
-        # dynamic mode: only this batch's (day, batch) partitions replaced
-        agg.write.mode("overwrite").partitionBy("day", "batch").parquet(rollup_dir)
+        # dynamic mode, set on this write only so the session's mode is
+        # untouched: only this batch's (day, batch) partitions replaced
+        agg.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("day", "batch").parquet(rollup_dir)
 
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{rollup_dir}_ckpt")
-        .start()
-    )
+    with stream_partitions(spark, static):
+        q = (
+            stream.writeStream.foreachBatch(upsert)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{rollup_dir}_ckpt")
+            .start()
+        )
+        q.awaitTermination()
+    return q
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:

@@ -37,8 +37,8 @@ import uuid
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import apply_runtime_confs, pinned_confs, stream_partitions
-from .lift import _eventtime_ts
+from ..session import pinned_confs, stream_partitions
+from .lift import _drain, _eventtime_ts, _events_static
 
 CUTOFF = "2024-01-08"  # late batch: ts < CUTOFF
 MID = "2024-01-10"  # buffer batch: CUTOFF <= ts < MID
@@ -93,8 +93,11 @@ def _stage_batches(spark, sf_dir: str) -> str:
     return stage
 
 
-def _staged_stream(spark, sf_dir: str, stage: str):
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+def _staged_stream(spark, sf_dir: str, stage: str, static=None):
+    """The staged files as a one-file-per-micro-batch stream. ``static``
+    is the events batch frame if the caller holds it."""
+    if static is None:
+        static = _events_static(spark, sf_dir)
     stream = (
         spark.readStream.schema(static.schema)
         .option("maxFilesPerTrigger", 1)
@@ -131,15 +134,15 @@ def _staged_stream(spark, sf_dir: str, stage: str):
     "dedup, whose filter is pre-aggregation.)",
 )
 def stream_late_accounting(spark, sf_dir):
-    apply_runtime_confs(spark)
+    static = _events_static(spark, sf_dir)
     stage = _stage_batches(spark, sf_dir)
     try:
-        stream = _staged_stream(spark, sf_dir, stage)
+        stream = _staged_stream(spark, sf_dir, stage, static)
         agg = stream.withWatermark("ts", DELAY).dropDuplicates(
             ["event_id", "ts"]
         )
         name = f"late_acct_{uuid.uuid4().hex[:8]}"
-        with stream_partitions(spark):
+        with stream_partitions(spark, static):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)
@@ -226,13 +229,13 @@ def exactly_once_batch_writer(target: str):
     "Integer cents keep the fold exact across merges",
 )
 def stream_exactly_once_sink(spark, sf_dir):
-    apply_runtime_confs(spark)
+    static = _events_static(spark, sf_dir)
     stage = _stage_batches(spark, sf_dir)
     target = f"/tmp/shippinglanes_stage/eos_{uuid.uuid4().hex[:8]}"
     try:
-        stream = _staged_stream(spark, sf_dir, stage)
+        stream = _staged_stream(spark, sf_dir, stage, static)
         writer = exactly_once_batch_writer(target)
-        with stream_partitions(spark):
+        with stream_partitions(spark, static):
             q = (
                 stream.writeStream.foreachBatch(writer)
                 .option("checkpointLocation", f"{target}_ckpt")
@@ -349,11 +352,9 @@ def _stage_chrono_with_flush(spark, sf_dir: str) -> str:
     "semantics",
 )
 def stream_join_outer(spark, sf_dir):
-    from .lift import _drain
-
-    apply_runtime_confs(spark)
+    static = _events_static(spark, sf_dir)
     stage = _stage_chrono_with_flush(spark, sf_dir)
-    stream = _staged_stream(spark, sf_dir, stage)
+    stream = _staged_stream(spark, sf_dir, stage, static)
     # the flush rows ride BOTH sides: the outer join's eviction watermark
     # is the MIN of the two sides' watermarks, so a flush on only one
     # side leaves the other stalled an hour below the end and the last
@@ -388,7 +389,7 @@ def stream_join_outer(spark, sf_dir):
     no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
     try:
         with pinned_confs(spark, no_data):
-            out = _drain(joined, "stream_join_outer", "append", partitions=4)
+            out = _drain(joined, "stream_join_outer", "append", static)
     finally:
         shutil.rmtree(stage, ignore_errors=True)  # the result is in memory
     return out.where(F.col("p_user") >= 0)

@@ -34,19 +34,8 @@ from ..session import apply_runtime_confs, stream_partitions
     "so the driver's hash check proves batch≡stream",
 )
 def stream_lift(spark, sf_dir):
-    apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # The file streaming source takes a directory; pathGlobFilter narrows
-    # it to the events table.
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+    static = _events_static(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir, static)
     agg = stream.groupBy(
         as_date(F.date_trunc("day", F.col("ts"))).cast("string").alias("day"),
         "event_type",
@@ -54,18 +43,7 @@ def stream_lift(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         money(F.sum("value")).alias("sum_value"),
     )
-    name = f"stream_lift_{uuid.uuid4().hex[:8]}"
-    with stream_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "stream_lift", "complete", static)
 
 
 @register(
@@ -94,8 +72,8 @@ def stream_lift(spark, sf_dir):
     "batch-sessionize ≡ stream-session-window on identical input",
 )
 def stream_session_window(spark, sf_dir):
-    apply_runtime_confs(spark)
-    stream = _events_stream(spark, sf_dir)
+    static = _events_static(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir, static)
     agg = (
         stream.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -111,18 +89,7 @@ def stream_session_window(spark, sf_dir):
             "sum_value",
         )
     )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    with stream_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "stream_sessions", "complete", static)
 
 
 @register(
@@ -147,8 +114,8 @@ def stream_dedup(spark, sf_dir):
     deterministic regardless of arrival order — the property file-order-
     based dropDuplicates lacks — and its state is one struct per key,
     mergeable across micro-batches."""
-    apply_runtime_confs(spark)
-    stream = _events_stream(spark, sf_dir)
+    static = _events_static(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir, static)
     first_copy = F.min(
         F.struct(
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -167,18 +134,7 @@ def stream_dedup(spark, sf_dir):
             F.col("fc.value").alias("value"),
         )
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with stream_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "stream_dedup", "complete", static)
 
 
 def tumbling_watermarked(spark, sf_dir, gap: str = "1 hour"):
@@ -186,16 +142,7 @@ def tumbling_watermarked(spark, sf_dir, gap: str = "1 hour"):
     mode (late rows beyond the watermark are dropped). Used by the
     streaming tests; not a declared query because append-mode emission
     depends on watermark advancement, not on the data alone."""
-    apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # The file streaming source takes a directory; pathGlobFilter narrows
-    # it to the events table.
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stream = _eventtime_ts(stream)
+    stream = _events_stream(spark, sf_dir)
     return (
         stream.withWatermark("ts", gap)
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -216,27 +163,38 @@ def _eventtime_ts(stream):
     return stream
 
 
-def _events_stream(spark, sf_dir):
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+def _events_static(spark, sf_dir):
+    """The events table as a batch DataFrame: the schema of the events
+    stream and the bounded input that sizes its drain."""
+    apply_runtime_confs(spark)
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def _events_stream(spark, sf_dir, static=None, one_file_per_batch=False):
+    """The events table as a file stream with event-time ``ts``.
+    ``static`` is the ``_events_static`` frame when the caller already
+    holds it (reading it again costs a schema-inference job)."""
+    if static is None:
+        static = _events_static(spark, sf_dir)
+    # The file streaming source takes a directory; pathGlobFilter narrows
+    # it to the events table.
+    reader = spark.readStream.schema(static.schema).option(
+        "pathGlobFilter", "events.parquet"
     )
-    return _eventtime_ts(stream)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return _eventtime_ts(reader.parquet(sf_dir))
 
 
-def _drain(agg, name_prefix: str, output_mode: str, partitions: int = 8):
+def _drain(agg, name_prefix: str, output_mode: str, bounded_input):
     """Run a streaming DataFrame to completion into a memory sink and
-    return the drained table. State-store partitions are pinned small for
-    the drain (see session.stream_partitions) — a plain driver session's
-    200-partition default costs ~200 state tasks per micro-batch.
-    Stream-stream joins keep FOUR state stores per partition, so their
-    drains pass an even smaller count (measured: 8 -> 5.0 s, 4 -> 3.8 s
-    for stream_join_outer at sf0.1; the rest is the per-micro-batch
-    incremental re-plan floor)."""
+    return the drained table. The drain's state-store partitions are
+    sized from ``bounded_input``, the batch DataFrame over the files the
+    stream reads or a byte count (see session.stream_partitions): a
+    plain driver session's 200-partition default costs ~200 state tasks
+    per micro-batch."""
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    with stream_partitions(agg.sparkSession, partitions):
+    with stream_partitions(agg.sparkSession, bounded_input):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -266,8 +224,9 @@ def _drain(agg, name_prefix: str, output_mode: str, partitions: int = 8):
     "watermark-independent, so the equality is exact",
 )
 def stream_join(spark, sf_dir):
+    static = _events_static(spark, sf_dir)
     return _drain(
-        stream_stream_join(spark, sf_dir), "stream_join", "append", partitions=4
+        stream_stream_join(spark, sf_dir, static), "stream_join", "append", static
     )
 
 
@@ -287,23 +246,23 @@ def stream_join(spark, sf_dir):
 def stream_stateful_totals(spark, sf_dir):
     from .stateful import running_user_totals
 
+    static = _events_static(spark, sf_dir)
     out = _drain(
-        running_user_totals(spark, sf_dir), "stream_totals", "update"
+        running_user_totals(spark, sf_dir, static), "stream_totals", "update", static
     )
     return out.select(
         "user_id", "n_events", money(F.col("sum_value")).alias("sum_value")
     )
 
 
-def stream_stream_join(spark, sf_dir):
+def stream_stream_join(spark, sf_dir, static=None):
     """Stream-stream inner join: each purchase joined to the same user's
     views from the preceding hour. Watermarks on both sides bound the
     join state (Spark drops buffered rows older than watermark+bound) —
     the production shape for event-correlation at scale. Inner-join
     emissions are watermark-independent, so the drained result equals the
     batch interval join (asserted in tests/test_streaming.py)."""
-    apply_runtime_confs(spark)
-    ev = _events_stream(spark, sf_dir)
+    ev = _events_stream(spark, sf_dir, static)
     views = (
         ev.where(F.col("event_type") == "view")
         .select(
@@ -349,8 +308,8 @@ def stream_stream_join(spark, sf_dir):
     "SQL, so the hash check proves batch≡stream for overlapping windows",
 )
 def stream_sliding(spark, sf_dir):
-    apply_runtime_confs(spark)
-    stream = _events_stream(spark, sf_dir)
+    static = _events_static(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir, static)
     agg = (
         stream.select(F.window("ts", "6 hours", "1 hour").alias("w"), "event_type")
         .groupBy("w", "event_type")
@@ -361,7 +320,7 @@ def stream_sliding(spark, sf_dir):
             "n",
         )
     )
-    return _drain(agg, "stream_sliding", "complete")
+    return _drain(agg, "stream_sliding", "complete", static)
 
 
 @register(
@@ -396,9 +355,7 @@ def stream_incremental_rollup(spark, sf_dir):
 
     out = tempfile.mkdtemp(prefix="rollup_")
     shutil.rmtree(out, ignore_errors=True)
-    with stream_partitions(spark):
-        q = incremental_rollup(spark, sf_dir, out)
-        q.awaitTermination()
+    incremental_rollup(spark, sf_dir, out)
     folded = read_rollup(spark, out)
     # localCheckpoint materializes the fold, so the scratch delta dir
     # (and its checkpoint) can be removed before returning
@@ -434,7 +391,13 @@ def stream_incremental_rollup(spark, sf_dir):
 def stream_rate_limit(spark, sf_dir):
     from .stateful import rate_limited_events
 
-    return _drain(rate_limited_events(spark, sf_dir), "stream_ratelimit", "update")
+    static = _events_static(spark, sf_dir)
+    return _drain(
+        rate_limited_events(spark, sf_dir, static=static),
+        "stream_ratelimit",
+        "update",
+        static,
+    )
 
 
 @register(
@@ -460,7 +423,10 @@ def stream_rate_limit(spark, sf_dir):
 def stream_transform_with_state(spark, sf_dir):
     from .stateful import user_activity_tws
 
-    return _drain(user_activity_tws(spark, sf_dir), "stream_tws", "update")
+    static = _events_static(spark, sf_dir)
+    return _drain(
+        user_activity_tws(spark, sf_dir, static), "stream_tws", "update", static
+    )
 
 
 @register(
@@ -486,13 +452,13 @@ def stream_transform_with_state(spark, sf_dir):
 def stream_topk_per_window(spark, sf_dir):
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
-    stream = _events_stream(spark, sf_dir)
+    static = _events_static(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir, static)
     agg = stream.groupBy(
         as_date(F.date_trunc("day", F.col("ts"))).cast("string").alias("day"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n"))
-    drained = _drain(agg, "stream_topk", "complete")
+    drained = _drain(agg, "stream_topk", "complete", static)
     w = Window.partitionBy("day").orderBy(F.desc("n"), "event_type")
     return (
         drained.withColumn("rn", F.row_number().over(w))

@@ -24,8 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import apply_runtime_confs
-from .lift import _eventtime_ts
+from .lift import _events_stream
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -39,18 +38,12 @@ STATE_SCHEMA = StructType(
 )
 
 
-def running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-user running totals with explicit GroupState."""
-    apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+def running_user_totals(
+    spark: SparkSession, sf_dir: str, static: DataFrame | None = None
+) -> DataFrame:
+    """Streaming per-user running totals with explicit GroupState.
+    ``static`` is the events batch frame if the caller holds it."""
+    stream = _events_stream(spark, sf_dir, static, one_file_per_batch=True)
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -94,7 +87,10 @@ RATE_STATE_SCHEMA = StructType(
 
 
 def rate_limited_events(
-    spark: SparkSession, sf_dir: str, per_hour: int = 3
+    spark: SparkSession,
+    sf_dir: str,
+    per_hour: int = 3,
+    static: DataFrame | None = None,
 ) -> DataFrame:
     """Streaming per-key rate limiter with explicit GroupState: admit the
     first `per_hour` events per user per hour bucket, drop the rest.
@@ -103,15 +99,7 @@ def rate_limited_events(
     same budget. The ingestion-throttling shape every feed handler needs;
     drained output equals the batch evt_rate_limit SQL (one file = one
     micro-batch, admission order = (ts, event_id))."""
-    apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    stream = _eventtime_ts(stream)
+    stream = _events_stream(spark, sf_dir, static, one_file_per_batch=True)
 
     def limiter(key, pdfs, state: GroupState):
         import pandas as pd
@@ -180,7 +168,9 @@ TWS_STATE_SCHEMA = StructType(
 )
 
 
-def user_activity_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
+def user_activity_tws(
+    spark: SparkSession, sf_dir: str, static: DataFrame | None = None
+) -> DataFrame:
     """Per-user activity profile via transformWithStateInPandas — the
     Spark 4 arbitrary-state API (StatefulProcessor + typed state
     handles) that supersedes applyInPandasWithState: explicit state
@@ -193,14 +183,7 @@ def user_activity_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = _eventtime_ts(
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir, static, one_file_per_batch=True)
     rows = stream.select(
         "user_id",
         "event_type",

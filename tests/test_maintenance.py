@@ -37,9 +37,7 @@ def test_incremental_rollup_equals_batch(spark, sf_dir):
     rollup = os.path.join(TMP, "rollup")
     shutil.rmtree(rollup, ignore_errors=True)
     shutil.rmtree(rollup + "_ckpt", ignore_errors=True)
-    q = incremental_rollup(spark, sf_dir, rollup)
-    q.awaitTermination()
-    q.stop()
+    incremental_rollup(spark, sf_dir, rollup)
     got = {
         (str(r.day), r.event_type): (r.n, r.sum_value)
         for r in read_rollup(spark, rollup).collect()
@@ -58,9 +56,7 @@ def test_incremental_rollup_equals_batch(spark, sf_dir):
 
     # replay idempotency: rerun with a fresh checkpoint, same result
     shutil.rmtree(rollup + "_ckpt", ignore_errors=True)
-    q2 = incremental_rollup(spark, sf_dir, rollup)
-    q2.awaitTermination()
-    q2.stop()
+    incremental_rollup(spark, sf_dir, rollup)
     again = {
         (str(r.day), r.event_type): (r.n, r.sum_value)
         for r in read_rollup(spark, rollup).collect()
@@ -80,9 +76,7 @@ def test_incremental_rollup_day_split_across_batches(spark, sf_dir):
     # two files, both containing rows from every day (odd/even event_id)
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(f"{src}/half=0")
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(f"{src}/half=1")
-    q = incremental_rollup(spark, src, rollup, glob="*.parquet")
-    q.awaitTermination()
-    q.stop()
+    incremental_rollup(spark, src, rollup, glob="*.parquet")
     got = {
         (str(r.day), r.event_type): (r.n, r.sum_value)
         for r in read_rollup(spark, rollup).collect()
@@ -97,6 +91,22 @@ def test_incremental_rollup_day_split_across_batches(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_incremental_rollup_keeps_session_overwrite_mode(spark, sf_dir):
+    """The rollup's dynamic partition overwrite is set per write: after
+    stream_incremental_rollup the session's mode reads its prior value,
+    so later partitioned overwrites in the session stay static."""
+    from shippinglanes_spark.registry import all_queries
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        assert all_queries()["stream_incremental_rollup"].fn(spark, sf_dir).count() > 0
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_schema_evolution_mergeschema(spark):

@@ -278,19 +278,83 @@ def test_transform_with_state_equals_batch(spark, sf_dir):
 def test_stream_partitions_pin_restores_conf(spark):
     """The drain-time state-partition pin must restore the caller's
     shuffle-partition setting afterwards (batch plans untouched)."""
+    from shippinglanes_spark.core import FAN_OUT_TASK_BYTES
     from shippinglanes_spark.session import stream_partitions
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with stream_partitions(spark, 4):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    with stream_partitions(spark, 2 * FAN_OUT_TASK_BYTES):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # exception-safe: the finally path restores too
     try:
-        with stream_partitions(spark, 3):
+        with stream_partitions(spark, 3 * FAN_OUT_TASK_BYTES):
             raise RuntimeError("boom")
     except RuntimeError:
         pass
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_input_width_byte_rule(spark):
+    """One task per FAN_OUT_TASK_BYTES of input, clamped to
+    [1, defaultParallelism]; fan_out_scaled keeps its floor of 2."""
+    from shippinglanes_spark.core import (
+        FAN_OUT_TASK_BYTES,
+        fan_out_scaled,
+        input_width,
+    )
+
+    cap = spark.sparkContext.defaultParallelism
+    assert cap > 2
+    assert input_width(spark, 0) == 1
+    assert input_width(spark, FAN_OUT_TASK_BYTES) == 1
+    assert input_width(spark, FAN_OUT_TASK_BYTES + 1) == 2
+    assert input_width(spark, 1 << 50) == cap
+    tiny = spark.range(0, 1, 1, 1)
+    assert input_width(spark, tiny) == 1
+    assert fan_out_scaled(tiny).rdd.getNumPartitions() == 2
+
+
+def test_stateful_drain_state_partitions_follow_input(spark, sf_dir):
+    """A stateful drain over the sf0.001 events file (27 KB, well under
+    one FAN_OUT_TASK_BYTES) runs its state operator on one partition,
+    as the progress events a StreamingQueryListener receives report."""
+    import threading
+
+    import pytest
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from shippinglanes_spark.core import FAN_OUT_TASK_BYTES
+
+    if os.path.getsize(f"{sf_dir}/events.parquet") > FAN_OUT_TASK_BYTES:
+        pytest.skip("events input spans more than one task's bytes")
+
+    class Widths(StreamingQueryListener):
+        def __init__(self):
+            self.widths = []
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.widths += [
+                so.numShufflePartitions for so in event.progress.stateOperators
+            ]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    listener = Widths()
+    spark.streams.addListener(listener)
+    try:
+        all_queries()["stream_session_window"].fn(spark, sf_dir)
+        assert listener.done.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.widths and set(listener.widths) == {1}
 
 
 def _outer_stage_dirs() -> set[str]:
