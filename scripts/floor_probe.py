@@ -43,8 +43,8 @@ def stateful_drain_floor(spark, n=5):
     try:
         spark.range(1).write.mode("overwrite").parquet(src)
         agg = spark.readStream.schema("id long").parquet(src).groupBy("id").count()
-        _drain(agg, "floor_drain", "complete", 0)  # cold/plan
-        return round(best_of(n, lambda: _drain(agg, "floor_drain", "complete", 0)), 4)
+        _drain(agg, 0, "complete", "floor_drain")  # cold/plan
+        return round(best_of(n, lambda: _drain(agg, 0, "complete", "floor_drain")), 4)
     finally:
         shutil.rmtree(src, ignore_errors=True)
 

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from shippinglanes_spark.io import table
+from shippinglanes_spark.io import event_time, table
 from shippinglanes_spark.registry import all_queries
 from shippinglanes_spark.session import get_spark
 
@@ -835,11 +835,7 @@ def main() -> None:
         "o": table(spark, SF, "orders"),
     }
     ten = {
-        "ev": spark.read.parquet(f"{SCRATCH}/events").withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-        if "bigint" in dict(spark.read.parquet(f"{SCRATCH}/events").dtypes).get("ts", "")
-        else spark.read.parquet(f"{SCRATCH}/events"),
+        "ev": event_time(spark.read.parquet(f"{SCRATCH}/events")),
         "li": spark.read.parquet(f"{SCRATCH}/lineitem"),
         "o": spark.read.parquet(f"{SCRATCH}/orders"),
     }

@@ -16,7 +16,10 @@ Two execution strategies, picked by role:
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from ..io import table
@@ -64,6 +67,34 @@ def _broadcast_index(spark, sf_dir):
     return out
 
 
+def _embedding_matrix(batch):
+    """The ``embedding`` list column of an Arrow RecordBatch as a float64
+    (rows, dim) matrix. Uniform widths with no null list or element
+    reshape the flat values zero-copy, value for value equal to the
+    per-row form (float32 -> float64 widening is exact); ragged or null
+    rows take the per-row ``np.asarray`` form itself."""
+    import numpy as np
+
+    col = batch.column("embedding")
+    off = col.offsets.to_numpy()
+    widths = np.diff(off)
+    if (
+        len(widths)
+        and (widths == widths[0]).all()
+        and not col.null_count
+        and not col.values.null_count
+    ):
+        flat = col.values.to_numpy(zero_copy_only=False)
+        return flat[off[0] : off[-1]].reshape(len(widths), widths[0]).astype(np.float64)
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in col.to_pylist()])
+
+
+# The mapInArrow kernels call _embedding_matrix on the workers, whose import
+# path need not hold this package (a driver-supplied session), so this
+# module's functions travel by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
 @register(
     "sim_cosine_pairs",
     section="2.9",
@@ -87,13 +118,11 @@ def sim_cosine_pairs(spark, sf_dir):
     a self-join with interpreted higher-order lambdas, and the same shape
     that runs behind an LSH candidate filter at 100 TB.
 
-    Round 12 (same float64 values bit-for-bit, exactness arguments at
-    each step):
+    The result equals the per-row form's bit-for-bit; the exactness
+    argument at each step:
     - probe side split into work-sized tasks (fan_out_scaled) so the
       dense GEMM parallelizes — row-local math, split-invariant;
-    - mapInArrow with a zero-copy offsets/values reshape instead of a
-      per-row asarray loop (float32 -> float64 widening is exact either
-      way, verified array_equal);
+    - mapInArrow over the zero-copy batch matrix (_embedding_matrix);
     - ROUND applied only to SURVIVING entries: np.round(x, 4) is
       rint(x * 1e4) / 1e4, and rint (ties-to-even) >= 3000 iff
       x * 1e4 >= 2999.5 — so the full-matrix rint+divide collapses to
@@ -111,23 +140,10 @@ def sim_cosine_pairs(spark, sf_dir):
         idx_ids = b_ids.value
         idx = b_mat.value
         for batch in batches:
-            i_emb = batch.schema.get_field_index("embedding")
-            i_id = batch.schema.get_field_index("vec_id")
-            col = batch.column(i_emb)
-            off = col.offsets.to_numpy()
-            widths = np.diff(off)
-            if len(widths) and (widths == widths[0]).all() and not col.null_count:
-                flat = col.values.to_numpy(zero_copy_only=False)
-                q = flat[off[0] : off[-1]].reshape(
-                    len(widths), widths[0]
-                ).astype(np.float64)
-            else:  # ragged/null rows: the previous per-row form
-                q = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in col.to_pylist()]
-                )
+            q = _embedding_matrix(batch)
             q = q / np.linalg.norm(q, axis=1, keepdims=True)
             y = (q @ idx.T) * 1e4
-            qids = batch.column(i_id).to_numpy(zero_copy_only=False)
+            qids = batch.column("vec_id").to_numpy(zero_copy_only=False)
             keep = (y >= 2999.5) & (qids[:, None] < idx_ids[None, :])
             qi, ii = np.nonzero(keep)
             yield pa.RecordBatch.from_arrays(
@@ -168,11 +184,9 @@ def sim_knn(spark, sf_dir):
 
     # Index ids are sorted ascending, so numpy argmax's lowest-index
     # tie-break equals the oracle's ORDER BY cos DESC, id_b ASC.
-    # Round 12: probe side split into work-sized tasks so the dense
-    # GEMM parallelizes (argmax is row-local, so the split cannot
-    # change any row), and the Arrow batch is reshaped zero-copy
-    # instead of a per-row asarray loop — same float64 matrix
-    # bit-for-bit (float32 -> float64 widening is exact either way).
+    # The probe side is split into work-sized tasks so the dense GEMM
+    # parallelizes (argmax is row-local, so the split cannot change any
+    # row); each Arrow batch becomes one matrix (_embedding_matrix).
     e, b_ids, b_mat = _broadcast_index(spark, sf_dir)
 
     from ..core import fan_out_scaled
@@ -184,23 +198,10 @@ def sim_knn(spark, sf_dir):
         idx_ids = b_ids.value
         idx = b_mat.value
         for batch in batches:
-            i_emb = batch.schema.get_field_index("embedding")
-            i_id = batch.schema.get_field_index("vec_id")
-            col = batch.column(i_emb)
-            off = col.offsets.to_numpy()
-            widths = np.diff(off)
-            if len(widths) and (widths == widths[0]).all() and not col.null_count:
-                flat = col.values.to_numpy(zero_copy_only=False)
-                q = flat[off[0] : off[-1]].reshape(
-                    len(widths), widths[0]
-                ).astype(np.float64)
-            else:  # ragged/null rows: the previous per-row form
-                q = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in col.to_pylist()]
-                )
+            q = _embedding_matrix(batch)
             q = q / np.linalg.norm(q, axis=1, keepdims=True)
             sims = q @ idx.T  # (batch, n_index) dense similarity block
-            qids = batch.column(i_id).to_numpy(zero_copy_only=False)
+            qids = batch.column("vec_id").to_numpy(zero_copy_only=False)
             self_mask = qids[:, None] == idx_ids[None, :]
             sims[self_mask] = -np.inf
             best = sims.argmax(axis=1)

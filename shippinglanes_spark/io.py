@@ -51,18 +51,26 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # The fixture's ts flavor has drifted between generator versions:
-        # TIMESTAMP(NANOS) (read as int64 via nanosAsLong), TIMESTAMP_NTZ
-        # (Arrow isAdjustedToUTC=false under Spark 4 inference), or plain
-        # TIMESTAMP. Normalize to TimestampType (LTZ) so watermarks,
-        # unix_micros, and event-time windows all work; the UTC session
-        # makes every branch value-preserving to the microsecond.
-        dtype = dict(df.dtypes).get("ts")
-        if dtype == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = event_time(df)
     _PLAN_CACHE[key] = df
+    return df
+
+
+def event_time(df: DataFrame) -> DataFrame:
+    """Normalize an events frame's ``ts`` to TimestampType (LTZ), the one
+    event-time rule every batch and stream read of events goes through.
+
+    The fixture's ts flavor has drifted between generator versions:
+    TIMESTAMP(NANOS) (read as int64 via nanosAsLong), TIMESTAMP_NTZ
+    (Arrow isAdjustedToUTC=false under Spark 4 inference), or plain
+    TIMESTAMP. Watermarks, ``unix_micros`` and event-time windows reject
+    NTZ; the UTC session makes every branch value-preserving to the
+    microsecond."""
+    dtype = dict(df.dtypes).get("ts")
+    if dtype == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dtype == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

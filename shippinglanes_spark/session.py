@@ -43,10 +43,28 @@ def apply_runtime_confs(spark: SparkSession) -> None:
 
 
 @_contextmanager
-def pinned_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set runtime ``confs`` for the duration of the block, then restore
-    the caller's values (also when the block raises). A conf the session
-    refuses to set is left as it is."""
+def stream_partitions(spark: SparkSession, bounded_input):
+    """Pin the confs a streaming drain relies on for the duration of the
+    drain, then restore the caller's values (also when the drain raises).
+    A conf the session refuses to set is left as it is.
+
+    - ``spark.sql.shuffle.partitions``: a streaming query captures its
+      state-store partition count from this conf at query START and keeps
+      it for the life of the checkpoint, and every micro-batch runs one
+      state load/commit task per partition. The count follows one rule,
+      the one ``core.fan_out_scaled`` uses: one partition per
+      ``core.FAN_OUT_TASK_BYTES`` of the drain's bounded input, clamped
+      to [1, defaultParallelism] (``core.input_width``).
+      ``bounded_input`` is the batch DataFrame over the files the stream
+      drains, or the feed's size in bytes.
+    - ``spark.sql.streaming.noDataMicroBatches.enabled=true`` (Spark's
+      default): watermark eviction after the last data batch runs in a
+      no-data micro-batch, which ``stream_join_outer``'s null rows need.
+    """
+    confs = {
+        "spark.sql.shuffle.partitions": str(input_width(spark, bounded_input)),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
     prev = {}
     for k, v in confs.items():
         try:
@@ -63,23 +81,6 @@ def pinned_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
             except Exception:
                 pass
-
-
-def stream_partitions(spark: SparkSession, bounded_input):
-    """Pin ``spark.sql.shuffle.partitions`` for the duration of a
-    streaming drain, then restore the caller's value.
-
-    A streaming query captures its state-store partition count from this
-    conf at query START and keeps it for the life of the checkpoint, and
-    every micro-batch runs one state load/commit task per partition. The
-    count follows one rule, the one ``core.fan_out_scaled`` uses: one
-    partition per ``core.FAN_OUT_TASK_BYTES`` of the drain's bounded
-    input, clamped to [1, defaultParallelism] (``core.input_width``).
-    ``bounded_input`` is the batch DataFrame over the files the stream
-    drains, or the feed's size in bytes. Batch plans are untouched: the
-    previous value is restored after the drain."""
-    n = input_width(spark, bounded_input)
-    return pinned_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def get_spark(

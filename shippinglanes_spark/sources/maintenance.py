@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..core import as_date, money
 from ..registry import register
-from ..session import apply_runtime_confs, stream_partitions
+from ..streaming.lift import _drain, _events_static, _events_stream
 
 
 def compact(
@@ -72,19 +72,10 @@ def incremental_rollup(
     when one day's events arrive across many micro-batches. Deltas keep
     raw (unrounded) sums: rounding happens once at read time, because
     round-then-sum of partials diverges from sum-then-round of the whole.
-    Drains every file present (availableNow) with the shuffle partitions
-    sized from the input (session.stream_partitions) and returns the
-    finished streaming query."""
-    apply_runtime_confs(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(src_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    Drains every file present (availableNow) through ``lift._drain``
+    and returns the finished streaming query."""
+    static = _events_static(spark, src_dir, glob)
+    stream = _events_stream(spark, src_dir, static, glob, one_file_per_batch=True)
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         agg = batch.groupBy(
@@ -100,15 +91,8 @@ def incremental_rollup(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("day", "batch").parquet(rollup_dir)
 
-    with stream_partitions(spark, static):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{rollup_dir}_ckpt")
-            .start()
-        )
-        q.awaitTermination()
-    return q
+    ckpt = f"{rollup_dir}_ckpt"
+    return _drain(stream, static, name="rollup", foreach_batch=upsert, checkpoint=ckpt)
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:

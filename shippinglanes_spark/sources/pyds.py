@@ -15,9 +15,12 @@ each partition generates only its own range (no driver materialization).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import stream_partitions
 
 FLAGS = ["PA", "LR", "MH", "HK", "SG", "MT", "CY", "BS"]
 N_VESSELS = 2000
@@ -189,26 +192,19 @@ def _make_stream_datasource():
     "is the replay path a checkpoint recovery exercises",
 )
 def source_python_stream(spark, sf_dir):
-    import uuid as _uuid
-
     spark.dataSource.register(_make_stream_datasource())
     stream = spark.readStream.format("position_feed").load()
     agg = stream.groupBy("batch").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("heading").cast("long").alias("heading_sum"),
     )
-    name = f"pystream_{_uuid.uuid4().hex[:8]}"
-    # availableNow snapshots only the FIRST offset advance of a simple
-    # stream reader (one read() call), so drain with a running query
-    # instead. No processingTime trigger: the default fires the next
-    # micro-batch as soon as the previous commits, and
-    # processAllAvailable() blocks exactly until the bounded feed
-    # reports no new offsets — the round-10 form (250 ms cadence + a
-    # 0.5 s poll loop) carried a multi-second latency floor that read
-    # as a 2-4x "regression" whenever per-batch latency crossed a poll
-    # boundary (VERDICT r10 open mover, adjudicated round 11).
-    from ..session import stream_partitions
-
+    name = f"pystream_{uuid.uuid4().hex[:8]}"
+    # Not lift._drain: availableNow snapshots only the FIRST offset
+    # advance of a simple stream reader (one read() call), so drain with
+    # a running query instead. No processingTime trigger: the default
+    # fires the next micro-batch as soon as the previous commits, and
+    # processAllAvailable() blocks exactly until the bounded feed reports
+    # no new offsets, so no poll interval adds latency.
     expect = _STREAM_BATCHES * _PER_BATCH
     # the pin must outlive start(): micro-batch 0 reads the conf on the
     # stream thread, which may plan after start() returns. The feed's

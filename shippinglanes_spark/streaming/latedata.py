@@ -28,17 +28,16 @@ Structured Streaming.
 
 from __future__ import annotations
 
-import json
+import datetime
 import os
-import shutil
 import time
-import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from ..io import event_time
 from ..registry import register
-from ..session import pinned_confs, stream_partitions
-from .lift import _drain, _eventtime_ts, _events_static
+from .lift import _drain, _events_static, _events_stream, _stage_dir
 
 CUTOFF = "2024-01-08"  # late batch: ts < CUTOFF
 MID = "2024-01-10"  # buffer batch: CUTOFF <= ts < MID
@@ -47,63 +46,61 @@ DELAY = "23 days"  # watermark delay: keeps day 01-07 admissible, drops earlier
 LATE_FILE = "batch2_late.parquet"  # the replayable last micro-batch
 
 
-def _stage_batches(spark, sf_dir: str) -> str:
-    """Write events as three parquet files whose modification times force
-    the file source to deliver newest-data-first: the recent tail (which
-    advances the watermark), a buffer slice, then the OLD rows — which
-    therefore arrive late. THREE batches because Spark's late-event
-    filter for batch N uses the watermark computed after batch N-2
-    (eviction uses N-1's — measured on this Spark; a two-batch split
-    admits-then-evicts instead of dropping). Driver-side staging is
-    arrival-order scaffolding, not part of the operator — a real feed
-    arrives out of order on its own."""
-    import datetime
-
+@contextmanager
+def _staged(spark, sf_dir: str, prefix: str, split):
+    """Stage the events table as the files ``split(table)`` returns, a
+    list of ``(file name, pyarrow table)``, with ascending modification
+    times so the file source delivers them in list order, one file per
+    micro-batch. Yields ``(stage dir, stream, static)``: the staged
+    files as a one-file-per-micro-batch stream, and the batch frame over
+    them that sizes its drain and gives the stream the staged files' own
+    schema. ``ts`` is normalized to ``timestamp[us]`` once, before the
+    split. The stage is removed when the block exits.
+    Driver-side staging is arrival-order scaffolding, not part of the
+    operator: a real feed arrives out of order on its own."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = f"/tmp/shippinglanes_stage/late_{uuid.uuid4().hex[:8]}"
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
+    with _stage_dir(prefix) as stage:
+        t = pq.read_table(f"{sf_dir}/events.parquet")
+        ts = t["ts"]
+        if ts.type == pa.int64():  # nanos-as-long flavor
+            ts = pc.divide(ts, 1000)
+        ts = pc.cast(ts, pa.timestamp("us"))
+        parts = split(t.set_column(t.schema.get_field_index("ts"), "ts", ts))
+        now = time.time()
+        for i, (fname, part) in enumerate(parts):
+            pq.write_table(part, f"{stage}/{fname}")
+            mt = now + (i - len(parts)) * 60
+            os.utime(f"{stage}/{fname}", (mt, mt))
+        static = _events_static(spark, stage, "*.parquet")
+        yield stage, _events_stream(spark, stage, static, "*.parquet", True), static
+
+
+def _late_split(t):
+    """Newest data first: the recent tail (which advances the
+    watermark), a buffer slice, then the OLD rows, which therefore
+    arrive late. THREE batches because Spark's late-event filter for
+    batch N uses the watermark computed after batch N-2 (eviction uses
+    N-1's, measured on this Spark; a two-batch split admits-then-evicts
+    instead of dropping)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     ts = t["ts"]
-    if str(ts.type) == "int64":  # nanos-as-long flavor
-        ts_us = pc.cast(pc.divide(ts, 1000), pa.timestamp("us"))
-    else:
-        ts_us = pc.cast(ts, pa.timestamp("us"))
-    cut = pa.scalar(
-        datetime.datetime.fromisoformat(CUTOFF), type=pa.timestamp("us")
+    cut, mid = (
+        pa.scalar(datetime.datetime.fromisoformat(d), type=pa.timestamp("us"))
+        for d in (CUTOFF, MID)
     )
-    mid = pa.scalar(
-        datetime.datetime.fromisoformat(MID), type=pa.timestamp("us")
-    )
-    parts = [
-        ("batch0_recent.parquet", pc.greater_equal(ts_us, mid)),
+    return [
+        ("batch0_recent.parquet", t.filter(pc.greater_equal(ts, mid))),
         (
             "batch1_buffer.parquet",
-            pc.and_(pc.greater_equal(ts_us, cut), pc.less(ts_us, mid)),
+            t.filter(pc.and_(pc.greater_equal(ts, cut), pc.less(ts, mid))),
         ),
-        (LATE_FILE, pc.less(ts_us, cut)),
+        (LATE_FILE, t.filter(pc.less(ts, cut))),
     ]
-    now = time.time()
-    for i, (fname, mask) in enumerate(parts):
-        pq.write_table(t.filter(mask), f"{stage}/{fname}")
-        mt = now - 180 + i * 60
-        os.utime(f"{stage}/{fname}", (mt, mt))
-    return stage
-
-
-def _staged_stream(spark, sf_dir: str, stage: str, static=None):
-    """The staged files as a one-file-per-micro-batch stream. ``static``
-    is the events batch frame if the caller holds it."""
-    if static is None:
-        static = _events_static(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    return _eventtime_ts(stream)
 
 
 @register(
@@ -134,37 +131,19 @@ def _staged_stream(spark, sf_dir: str, stage: str, static=None):
     "dedup, whose filter is pre-aggregation.)",
 )
 def stream_late_accounting(spark, sf_dir):
-    static = _events_static(spark, sf_dir)
-    stage = _stage_batches(spark, sf_dir)
-    try:
-        stream = _staged_stream(spark, sf_dir, stage, static)
-        agg = stream.withWatermark("ts", DELAY).dropDuplicates(
-            ["event_id", "ts"]
-        )
-        name = f"late_acct_{uuid.uuid4().hex[:8]}"
-        with stream_partitions(spark, static):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        n_input = 0
-        n_dropped = 0
-        for p in q.recentProgress:
-            prog = json.loads(p.json) if hasattr(p, "json") else p
-            n_input += int(prog.get("numInputRows", 0))
-            for so in prog.get("stateOperators", []):
-                n_dropped += int(so.get("numRowsDroppedByWatermark", 0))
-        q.stop()
-        return spark.createDataFrame(
-            [(n_input, n_dropped, n_input - n_dropped)],
-            "n_input long, n_dropped long, n_ontime long",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    with _staged(spark, sf_dir, "late", _late_split) as (_, stream, static):
+        dedup = stream.withWatermark("ts", DELAY).dropDuplicates(["event_id", "ts"])
+        q = _drain(dedup, static, name="late_acct")
+    n_input = sum(p.numInputRows for p in q.recentProgress)
+    n_dropped = sum(
+        so.numRowsDroppedByWatermark
+        for p in q.recentProgress
+        for so in p.stateOperators
+    )
+    return spark.createDataFrame(
+        [(n_input, n_dropped, n_input - n_dropped)],
+        "n_input long, n_dropped long, n_ontime long",
+    )
 
 
 def exactly_once_batch_writer(target: str):
@@ -179,7 +158,7 @@ def exactly_once_batch_writer(target: str):
     def write_batch(bdf, bid: int):
         spark = bdf.sparkSession
         delta = (
-            _eventtime_ts(bdf)
+            event_time(bdf)
             .groupBy(
                 F.date_trunc("day", F.col("ts")).cast("date").cast("string")
                 .alias("day"),
@@ -229,101 +208,48 @@ def exactly_once_batch_writer(target: str):
     "Integer cents keep the fold exact across merges",
 )
 def stream_exactly_once_sink(spark, sf_dir):
-    static = _events_static(spark, sf_dir)
-    stage = _stage_batches(spark, sf_dir)
-    target = f"/tmp/shippinglanes_stage/eos_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = _staged_stream(spark, sf_dir, stage, static)
-        writer = exactly_once_batch_writer(target)
-        with stream_partitions(spark, static):
-            q = (
-                stream.writeStream.foreachBatch(writer)
-                .option("checkpointLocation", f"{target}_ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            q.stop()
-        versions = sorted(
-            int(d[1:]) for d in os.listdir(target) if d.startswith("v")
-        )
-        last = versions[-1]
-        # forced replay: the last micro-batch (= the late staged file) goes
-        # through the writer AGAIN with the same batch id
-        replay_df = spark.read.parquet(f"{stage}/{LATE_FILE}")
-        writer(replay_df, last)
-        result = spark.read.parquet(f"{target}/v{last}").localCheckpoint()
-        return result
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(target, ignore_errors=True)
-        shutil.rmtree(f"{target}_ckpt", ignore_errors=True)
+    with _staged(spark, sf_dir, "late", _late_split) as (stage, stream, static):
+        with _stage_dir("eos") as target:
+            writer = exactly_once_batch_writer(target)
+            _drain(stream, static, foreach_batch=writer, checkpoint=f"{target}/_ckpt")
+            last = max(int(d[1:]) for d in os.listdir(target) if d.startswith("v"))
+            # forced replay: the last micro-batch (= the late staged file)
+            # goes through the writer AGAIN with the same batch id
+            writer(spark.read.parquet(f"{stage}/{LATE_FILE}"), last)
+            return spark.read.parquet(f"{target}/v{last}").localCheckpoint()
 
 
-def _stage_chrono_with_flush(spark, sf_dir: str) -> str:
-    """Stage events as one data batch plus ONE far-future FLUSH file
-    holding one dummy row.
+def _flush_split(t):
+    """Chronological order, one data batch plus ONE far-future FLUSH
+    file holding one dummy row.
+
     Outer-join null emission is watermark-driven: an unmatched left row
     surfaces only after the watermark passes its join bound, and the
     watermark advances using the batch BEFORE last and evicts in the
-    batch AFTER it advances. A second flush batch used to carry that
-    eviction pass; the engine's no-data micro-batch (pinned on for the
-    drain) runs it after the flush batch advances the watermark, so one
-    flush suffices (round 12, hash-verified at all three SFs). Chronological
-    order means no real row ever arrives late (this query is about
-    OUTER emission, not drops — stream_late_accounting covers drops)."""
-    import datetime
-
+    batch AFTER it advances. The flush batch advances the watermark past
+    every real row's eviction bound, and the engine's no-data
+    micro-batch (pinned on by the drain) then runs the eviction pass;
+    the flush rows' own state never needs to evict because they are
+    filtered from the result. Chronological arrival only matters ACROSS
+    micro-batches, so the real data stays one batch (each extra
+    micro-batch pays a full incremental re-plan and state pass), and no
+    real row ever arrives late: this query is about OUTER emission, not
+    drops (stream_late_accounting covers drops)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    stage = f"/tmp/shippinglanes_stage/outer_{uuid.uuid4().hex[:8]}"
-    os.makedirs(stage, exist_ok=True)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    ts = t["ts"]
-    if str(ts.type) == "int64":  # nanos-as-long flavor
-        ts_us = pc.cast(pc.divide(ts, 1000), pa.timestamp("us"))
-    else:
-        ts_us = pc.cast(ts, pa.timestamp("us"))
-    t = t.set_column(t.schema.get_field_index("ts"), "ts", ts_us)
-    far = pc.max(ts_us).as_py() + datetime.timedelta(days=30)
-
-    def dummy(offset_days: int):
-        return pa.table(
-            {
-                "event_id": pa.array([-1], pa.int64()),
-                "ts": pa.array(
-                    [far + datetime.timedelta(days=offset_days)],
-                    pa.timestamp("us"),
-                ),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["flush"], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            }
-        ).select(t.column_names)
-
-    # one data batch + ONE flush batch: chronological arrival only
-    # matters ACROSS micro-batches (the watermark updates between them),
-    # so splitting the real data into several batches buys nothing and
-    # each extra micro-batch pays a full incremental re-plan + state
-    # pass. Round 12: the second flush batch dropped — after the flush
-    # batch advances the watermark past every real row's eviction bound,
-    # the engine's NO-DATA micro-batch (noDataMicroBatches, pinned on
-    # by the drain) runs the eviction pass itself; the flush rows' own
-    # state never needs to evict because they are filtered from the result.
-    # Verified hash-equal to the batch interval join at all three SFs.
-    parts = [
-        ("b0_data.parquet", t),
-        ("b2_flush.parquet", dummy(0)),
-    ]
-    now = time.time()
-    for i, (fname, tab) in enumerate(parts):
-        pq.write_table(tab, f"{stage}/{fname}")
-        mt = now - 240 + i * 60
-        os.utime(f"{stage}/{fname}", (mt, mt))
-    return stage
+    far = pc.max(t["ts"]).as_py() + datetime.timedelta(days=30)
+    flush = pa.table(
+        {
+            "event_id": pa.array([-1], pa.int64()),
+            "ts": pa.array([far], pa.timestamp("us")),
+            "user_id": pa.array([-1], pa.int64()),
+            "event_type": pa.array(["flush"], pa.string()),
+            "value": pa.array([0.0], pa.float64()),
+            "props": pa.array(["{}"], pa.string()),
+        }
+    ).select(t.column_names)
+    return [("b0_data.parquet", t), ("b2_flush.parquet", flush)]
 
 
 @register(
@@ -352,44 +278,36 @@ def _stage_chrono_with_flush(spark, sf_dir: str) -> str:
     "semantics",
 )
 def stream_join_outer(spark, sf_dir):
-    static = _events_static(spark, sf_dir)
-    stage = _stage_chrono_with_flush(spark, sf_dir)
-    stream = _staged_stream(spark, sf_dir, stage, static)
-    # the flush rows ride BOTH sides: the outer join's eviction watermark
-    # is the MIN of the two sides' watermarks, so a flush on only one
-    # side leaves the other stalled an hour below the end and the last
-    # unmatched purchases never emit (measured: 2 rows short)
-    views = (
-        stream.where(F.col("event_type").isin("view", "flush"))
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
+    with _staged(spark, sf_dir, "outer", _flush_split) as (_, stream, static):
+        # the flush rows ride BOTH sides: the outer join's eviction
+        # watermark is the MIN of the two sides' watermarks, so a flush on
+        # only one side leaves the other stalled an hour below the end and
+        # the last unmatched purchases never emit (measured: 2 rows short)
+        views = (
+            stream.where(F.col("event_type").isin("view", "flush"))
+            .select(
+                F.col("user_id").alias("v_user"),
+                F.col("event_id").alias("view_id"),
+                F.col("ts").alias("v_ts"),
+            )
+            .withWatermark("v_ts", "1 hour")
         )
-        .withWatermark("v_ts", "1 hour")
-    )
-    purchases = (
-        stream.where(F.col("event_type").isin("purchase", "flush"))
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
+        purchases = (
+            stream.where(F.col("event_type").isin("purchase", "flush"))
+            .select(
+                F.col("user_id").alias("p_user"),
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("p_ts"),
+            )
+            .withWatermark("p_ts", "1 hour")
         )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("v_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select("p_user", "purchase_id", "view_id")
-    # the eviction pass after the flush batch IS the no-data micro-batch,
-    # so pin it on for the drain instead of trusting the session default
-    no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
-    try:
-        with pinned_confs(spark, no_data):
-            out = _drain(joined, "stream_join_outer", "append", static)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)  # the result is in memory
-    return out.where(F.col("p_user") >= 0)
+        joined = purchases.join(
+            views,
+            (F.col("p_user") == F.col("v_user"))
+            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+            & (F.col("v_ts") <= F.col("p_ts")),
+            "left_outer",
+        ).select("p_user", "purchase_id", "view_id")
+        q = _drain(joined, static, name="stream_join_outer")
+    # the memory sink outlives the stage; the flush rows are dropped here
+    return spark.table(q.name).where(F.col("p_user") >= 0)

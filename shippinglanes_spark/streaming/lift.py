@@ -11,12 +11,15 @@ hash match IS the batch≡stream equivalence proof. Watermarked append-mode
 
 from __future__ import annotations
 
+import os
+import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from ..core import as_date, epoch_us, money
-from ..io import table
+from ..io import event_time
 from ..registry import register
 from ..session import apply_runtime_confs, stream_partitions
 
@@ -43,7 +46,7 @@ def stream_lift(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         money(F.sum("value")).alias("sum_value"),
     )
-    return _drain(agg, "stream_lift", "complete", static)
+    return spark.table(_drain(agg, static, "complete", "stream_lift").name)
 
 
 @register(
@@ -89,7 +92,7 @@ def stream_session_window(spark, sf_dir):
             "sum_value",
         )
     )
-    return _drain(agg, "stream_sessions", "complete", static)
+    return spark.table(_drain(agg, static, "complete", "stream_sessions").name)
 
 
 @register(
@@ -134,7 +137,7 @@ def stream_dedup(spark, sf_dir):
             F.col("fc.value").alias("value"),
         )
     )
-    return _drain(agg, "stream_dedup", "complete", static)
+    return spark.table(_drain(agg, static, "complete", "stream_dedup").name)
 
 
 def tumbling_watermarked(spark, sf_dir, gap: str = "1 hour"):
@@ -150,61 +153,77 @@ def tumbling_watermarked(spark, sf_dir, gap: str = "1 hour"):
     )
 
 
-def _eventtime_ts(stream):
-    """Normalize the ``ts`` column to TimestampType (LTZ): watermarks and
-    event-time windows reject TIMESTAMP_NTZ, and parquet written by Arrow
-    (isAdjustedToUTC=false) infers as NTZ under Spark 4. The session runs
-    in UTC, so the cast is value-preserving."""
-    dtype = dict(stream.dtypes).get("ts")
-    if dtype == "bigint":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dtype == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+STAGE_ROOT = "/tmp/shippinglanes_stage"
 
 
-def _events_static(spark, sf_dir):
-    """The events table as a batch DataFrame: the schema of the events
-    stream and the bounded input that sizes its drain."""
+@contextmanager
+def _stage_dir(prefix: str):
+    """A fresh scratch directory ``STAGE_ROOT/<prefix>_<id>`` for one
+    query's staged input, sink or checkpoint, removed when the block
+    exits, also when it raises."""
+    path = f"{STAGE_ROOT}/{prefix}_{uuid.uuid4().hex[:8]}"
+    os.makedirs(path)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _events_static(spark, src_dir, glob="events.parquet"):
+    """The ``glob`` files under ``src_dir`` as a batch DataFrame: the
+    schema of the stream over the same files and the bounded input that
+    sizes its drain."""
     apply_runtime_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return spark.read.option("pathGlobFilter", glob).parquet(src_dir)
 
 
-def _events_stream(spark, sf_dir, static=None, one_file_per_batch=False):
-    """The events table as a file stream with event-time ``ts``.
-    ``static`` is the ``_events_static`` frame when the caller already
+def _events_stream(
+    spark, src_dir, static=None, glob="events.parquet", one_file_per_batch=False
+):
+    """The ``glob`` files under ``src_dir`` as a file stream with
+    event-time ``ts`` (``io.event_time``). ``static`` is the
+    ``_events_static`` frame over the same files when the caller already
     holds it (reading it again costs a schema-inference job)."""
     if static is None:
-        static = _events_static(spark, sf_dir)
-    # The file streaming source takes a directory; pathGlobFilter narrows
-    # it to the events table.
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", "events.parquet"
-    )
+        static = _events_static(spark, src_dir, glob)
+    reader = spark.readStream.schema(static.schema).option("pathGlobFilter", glob)
     if one_file_per_batch:
         reader = reader.option("maxFilesPerTrigger", 1)
-    return _eventtime_ts(reader.parquet(sf_dir))
+    return event_time(reader.parquet(src_dir))
 
 
-def _drain(agg, name_prefix: str, output_mode: str, bounded_input):
-    """Run a streaming DataFrame to completion into a memory sink and
-    return the drained table. The drain's state-store partitions are
-    sized from ``bounded_input``, the batch DataFrame over the files the
-    stream reads or a byte count (see session.stream_partitions): a
-    plain driver session's 200-partition default costs ~200 state tasks
-    per micro-batch."""
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    with stream_partitions(agg.sparkSession, bounded_input):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+def _drain(
+    df,
+    bounded_input,
+    output_mode="append",
+    name="drain",
+    foreach_batch=None,
+    checkpoint=None,
+):
+    """Run a streaming DataFrame to completion (availableNow trigger)
+    and return the stopped query. The sink is the memory table
+    ``q.name`` unless ``foreach_batch`` is given, which then writes each
+    micro-batch under ``checkpoint``. The drain's confs are pinned by
+    ``session.stream_partitions``: state partitions sized from
+    ``bounded_input`` (a plain driver session's 200-partition default
+    costs ~200 state tasks per micro-batch) and no-data micro-batches
+    on."""
+    writer = (
+        df.writeStream.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if foreach_batch is None:
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(foreach_batch).option(
+            "checkpointLocation", checkpoint
         )
+    with stream_partitions(df.sparkSession, bounded_input):
+        q = writer.start()
         q.awaitTermination()
         q.stop()
-    return agg.sparkSession.table(name)
+    return q
 
 
 @register(
@@ -225,9 +244,8 @@ def _drain(agg, name_prefix: str, output_mode: str, bounded_input):
 )
 def stream_join(spark, sf_dir):
     static = _events_static(spark, sf_dir)
-    return _drain(
-        stream_stream_join(spark, sf_dir, static), "stream_join", "append", static
-    )
+    q = _drain(stream_stream_join(spark, sf_dir, static), static, name="stream_join")
+    return spark.table(q.name)
 
 
 @register(
@@ -247,10 +265,10 @@ def stream_stateful_totals(spark, sf_dir):
     from .stateful import running_user_totals
 
     static = _events_static(spark, sf_dir)
-    out = _drain(
-        running_user_totals(spark, sf_dir, static), "stream_totals", "update", static
+    q = _drain(
+        running_user_totals(spark, sf_dir, static), static, "update", "stream_totals"
     )
-    return out.select(
+    return spark.table(q.name).select(
         "user_id", "n_events", money(F.col("sum_value")).alias("sum_value")
     )
 
@@ -320,7 +338,7 @@ def stream_sliding(spark, sf_dir):
             "n",
         )
     )
-    return _drain(agg, "stream_sliding", "complete", static)
+    return spark.table(_drain(agg, static, "complete", "stream_sliding").name)
 
 
 @register(
@@ -348,26 +366,22 @@ def stream_incremental_rollup(spark, sf_dir):
     them — sums are algebraic, so folded partials equal the one-shot
     aggregate exactly. At 100 TB the rollup table is the thing that
     makes daily dashboards O(days), not O(events)."""
-    import shutil
-    import tempfile
-
     from ..sources.maintenance import incremental_rollup, read_rollup
 
-    out = tempfile.mkdtemp(prefix="rollup_")
-    shutil.rmtree(out, ignore_errors=True)
-    incremental_rollup(spark, sf_dir, out)
-    folded = read_rollup(spark, out)
-    # localCheckpoint materializes the fold, so the scratch delta dir
-    # (and its checkpoint) can be removed before returning
-    result = folded.select(
-        F.col("day").cast("string").alias("day"),
-        "event_type",
-        F.col("n").cast("long").alias("n"),
-        "sum_value",
-    ).localCheckpoint()
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(f"{out}_ckpt", ignore_errors=True)
-    return result
+    with _stage_dir("rollup") as stage:
+        deltas = f"{stage}/deltas"
+        incremental_rollup(spark, sf_dir, deltas)
+        # localCheckpoint materializes the fold before the stage goes
+        return (
+            read_rollup(spark, deltas)
+            .select(
+                F.col("day").cast("string").alias("day"),
+                "event_type",
+                F.col("n").cast("long").alias("n"),
+                "sum_value",
+            )
+            .localCheckpoint()
+        )
 
 
 @register(
@@ -392,12 +406,13 @@ def stream_rate_limit(spark, sf_dir):
     from .stateful import rate_limited_events
 
     static = _events_static(spark, sf_dir)
-    return _drain(
+    q = _drain(
         rate_limited_events(spark, sf_dir, static=static),
-        "stream_ratelimit",
-        "update",
         static,
+        "update",
+        "stream_ratelimit",
     )
+    return spark.table(q.name)
 
 
 @register(
@@ -424,9 +439,8 @@ def stream_transform_with_state(spark, sf_dir):
     from .stateful import user_activity_tws
 
     static = _events_static(spark, sf_dir)
-    return _drain(
-        user_activity_tws(spark, sf_dir, static), "stream_tws", "update", static
-    )
+    q = _drain(user_activity_tws(spark, sf_dir, static), static, "update", "stream_tws")
+    return spark.table(q.name)
 
 
 @register(
@@ -458,7 +472,7 @@ def stream_topk_per_window(spark, sf_dir):
         as_date(F.date_trunc("day", F.col("ts"))).cast("string").alias("day"),
         "event_type",
     ).agg(F.count(F.lit(1)).alias("n"))
-    drained = _drain(agg, "stream_topk", "complete", static)
+    drained = spark.table(_drain(agg, static, "complete", "stream_topk").name)
     w = Window.partitionBy("day").orderBy(F.desc("n"), "event_type")
     return (
         drained.withColumn("rn", F.row_number().over(w))

@@ -140,7 +140,7 @@ def test_late_rows_dropped_exact_count(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from shippinglanes_spark.streaming.lift import _eventtime_ts
+    from shippinglanes_spark.io import event_time
 
     def us(day, hour=0):
         import datetime
@@ -166,7 +166,7 @@ def test_late_rows_dropped_exact_count(spark, tmp_path):
         )
         pq.write_table(t, f"{stage}/f{i}.parquet")
         os.utime(f"{stage}/f{i}.parquet", (now - 180 + i * 60,) * 2)
-    stream = _eventtime_ts(
+    stream = event_time(
         spark.readStream.schema("event_id long, ts timestamp_ntz")
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
@@ -200,45 +200,34 @@ def test_exactly_once_sink_replay_idempotent(spark, sf_dir, tmp_path):
     write is the fence."""
     from shippinglanes_spark.streaming.latedata import (
         LATE_FILE,
-        _stage_batches,
-        _staged_stream,
+        _late_split,
+        _staged,
         exactly_once_batch_writer,
     )
+    from shippinglanes_spark.streaming.lift import _drain
 
-    stage = _stage_batches(spark, sf_dir)
     target = str(tmp_path / "eos")
     writer = exactly_once_batch_writer(target)
-    stream = _staged_stream(spark, sf_dir, stage)
-    q = (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    import os
-    import shutil
-
-    versions = sorted(int(d[1:]) for d in os.listdir(target) if d[0] == "v")
-    last = versions[-1]
-    before = {
-        (r.day, r.event_type): (r.n, r.sum_cents)
-        for r in spark.read.parquet(f"{target}/v{last}").collect()
-    }
-    # replay the LAST batch twice and an EARLIER batch once
-    late_df = spark.read.parquet(f"{stage}/{LATE_FILE}")
-    writer(late_df, last)
-    writer(late_df, last)
-    if len(versions) >= 2:
-        buf_df = spark.read.parquet(f"{stage}/batch1_buffer.parquet")
-        writer(buf_df, versions[-2])
-    after = {
-        (r.day, r.event_type): (r.n, r.sum_cents)
-        for r in spark.read.parquet(f"{target}/v{last}").collect()
-    }
+    with _staged(spark, sf_dir, "late", _late_split) as (stage, stream, static):
+        _drain(stream, static, foreach_batch=writer, checkpoint=str(tmp_path / "ckpt"))
+        versions = sorted(int(d[1:]) for d in os.listdir(target) if d[0] == "v")
+        last = versions[-1]
+        before = {
+            (r.day, r.event_type): (r.n, r.sum_cents)
+            for r in spark.read.parquet(f"{target}/v{last}").collect()
+        }
+        # replay the LAST batch twice and an EARLIER batch once
+        late_df = spark.read.parquet(f"{stage}/{LATE_FILE}")
+        writer(late_df, last)
+        writer(late_df, last)
+        if len(versions) >= 2:
+            buf_df = spark.read.parquet(f"{stage}/batch1_buffer.parquet")
+            writer(buf_df, versions[-2])
+        after = {
+            (r.day, r.event_type): (r.n, r.sum_cents)
+            for r in spark.read.parquet(f"{target}/v{last}").collect()
+        }
     assert after == before
-    shutil.rmtree(stage, ignore_errors=True)
 
 
 def test_transform_with_state_equals_batch(spark, sf_dir):
@@ -357,20 +346,43 @@ def test_stateful_drain_state_partitions_follow_input(spark, sf_dir):
     assert listener.widths and set(listener.widths) == {1}
 
 
-def _outer_stage_dirs() -> set[str]:
-    root = "/tmp/shippinglanes_stage"
-    if not os.path.isdir(root):
-        return set()
-    return {d for d in os.listdir(root) if d.startswith("outer_")}
+def _stage_leftovers() -> set[str]:
+    """Every entry under the stage root, plus the ``/tmp/rollup_*`` dirs
+    the incremental rollup once staged outside it."""
+    import glob
+
+    from shippinglanes_spark.streaming.lift import STAGE_ROOT
+
+    staged = set(glob.glob(f"{STAGE_ROOT}/*"))
+    return staged | set(glob.glob("/tmp/rollup_*"))
 
 
 def test_stream_join_outer_leaves_no_stage_dir(spark, sf_dir):
     """The drained result lives in the memory sink, so the staged input
     files are removed once the drain ends."""
-    before = _outer_stage_dirs()
+    before = _stage_leftovers()
     out = all_queries()["stream_join_outer"].fn(spark, sf_dir)
-    assert _outer_stage_dirs() - before == set()
+    assert _stage_leftovers() - before == set()
     assert out.count() > 0  # still readable after the stage is gone
+
+
+def test_stream_incremental_rollup_leaves_no_stage_dir_on_error(
+    spark, sf_dir, monkeypatch
+):
+    """A fold that raises still removes the rollup's delta and checkpoint
+    directories."""
+    import pytest
+
+    from shippinglanes_spark.sources import maintenance
+
+    def fold_fails(*args, **kwargs):
+        raise RuntimeError("fold failed")
+
+    monkeypatch.setattr(maintenance, "read_rollup", fold_fails)
+    before = _stage_leftovers()
+    with pytest.raises(RuntimeError, match="fold failed"):
+        all_queries()["stream_incremental_rollup"].fn(spark, sf_dir)
+    assert _stage_leftovers() - before == set()
 
 
 def test_stream_join_outer_pins_no_data_batches(spark, sf_dir):
@@ -387,3 +399,84 @@ def test_stream_join_outer_pins_no_data_batches(spark, sf_dir):
         assert spark.conf.get(key) == "false"
     finally:
         spark.conf.set(key, prev)
+
+
+def test_stager_splits(spark, sf_dir):
+    """Both splits stage the events rows at timestamp[us] under their
+    file names, in ascending modification time (= arrival order); the
+    late split partitions the rows, the flush split appends one flush
+    row; the stage is gone after the block."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from shippinglanes_spark.streaming.latedata import (
+        LATE_FILE,
+        _flush_split,
+        _late_split,
+        _staged,
+    )
+
+    n_events = pq.read_metadata(f"{sf_dir}/events.parquet").num_rows
+    splits = {
+        _late_split: ["batch0_recent.parquet", "batch1_buffer.parquet", LATE_FILE],
+        _flush_split: ["b0_data.parquet", "b2_flush.parquet"],
+    }
+    rows = {}
+    for split, names in splits.items():
+        with _staged(spark, sf_dir, "test", split) as (stage, _, static):
+            by_arrival = sorted(
+                os.listdir(stage), key=lambda f: os.stat(f"{stage}/{f}").st_mtime
+            )
+            assert by_arrival == names
+            mtimes = [os.stat(f"{stage}/{f}").st_mtime for f in names]
+            assert mtimes == sorted(set(mtimes))
+            tables = [pq.read_table(f"{stage}/{f}") for f in names]
+            assert {t.schema.field("ts").type for t in tables} == {
+                pa.timestamp("us")
+            }
+            rows[split] = [t.num_rows for t in tables]
+            assert static.count() == sum(rows[split])
+        assert not os.path.exists(stage)
+        if split is _flush_split:
+            assert tables[1].column("event_type").to_pylist() == ["flush"]
+    assert sum(rows[_late_split]) == n_events and min(rows[_late_split]) > 0
+    assert rows[_flush_split] == [n_events, 1]
+
+
+def test_stream_paths_have_one_home():
+    """The file-fed stream drains share one drain loop, one event-time
+    rule and one stage root: ``.writeStream`` is written only in
+    ``lift._drain`` and ``source_python_stream`` (whose feed needs a
+    running query), ``ts div 1000`` only in ``io.py``, and the stage
+    root's path only at ``STAGE_ROOT``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "shippinglanes_spark"
+    writers, ts_rule, stage_root = set(), set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        lines = src.splitlines()
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for no, line in enumerate(lines, 1):
+            if ".writeStream" in line:
+                inner = [f for f in funcs if f.lineno <= no <= f.end_lineno]
+                owner = min(inner, key=lambda f: f.end_lineno - f.lineno, default=None)
+                writers.add((rel, owner and owner.name))
+            if "ts div 1000" in line:
+                ts_rule.add(rel)
+            if "/tmp/shippinglanes_stage" in line:
+                stage_root.append((rel, line.strip()))
+    assert writers == {
+        ("streaming/lift.py", "_drain"),
+        ("sources/pyds.py", "source_python_stream"),
+    }
+    assert ts_rule == {"io.py"}
+    assert stage_root == [
+        ("streaming/lift.py", 'STAGE_ROOT = "/tmp/shippinglanes_stage"')
+    ]
