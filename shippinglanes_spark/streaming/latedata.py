@@ -1,18 +1,18 @@
 """SURVEY §2.10 out-of-order tail — watermark late-data ACCOUNTING and an
 exactly-once foreachBatch sink with batch-id replay fencing.
 
-Both queries stage the events table into multiple files with controlled
+The queries here stage the events table into files with controlled
 arrival order (modification time), because late-data semantics only
 exist across micro-batch boundaries: a single drained file never
 advances the watermark mid-stream. Staging simulates the arrival order a
 production feed has for free; the operators themselves are pure
 Structured Streaming.
 
-- stream_late_accounting: a watermarked day-window aggregation fed
-  recent-then-old micro-batches, reporting (n_input, n_dropped,
-  n_ontime) from StreamingQueryProgress's numRowsDroppedByWatermark.
-  The oracle computes the SAME numbers from batch SQL (watermark = max
-  on-time event time - delay; a row is dropped iff its day window closed
+- stream_late_accounting: a watermarked dedup fed recent-then-old
+  micro-batches, reporting (n_input, n_dropped, n_ontime) from
+  StreamingQueryProgress's numRowsDroppedByWatermark. The oracle
+  computes the SAME numbers from batch SQL (watermark = max on-time
+  event time - delay; a late-batch row is dropped iff its event time is
   below that), so the driver's hash check certifies Spark's late-row
   accounting against an independently derived expectation.
 
@@ -75,7 +75,10 @@ def _staged(spark, sf_dir: str, prefix: str, split):
             mt = now + (i - len(parts)) * 60
             os.utime(f"{stage}/{fname}", (mt, mt))
         static = _events_static(spark, stage, "*.parquet")
-        yield stage, _events_stream(spark, stage, static, "*.parquet", True), static
+        stream = _events_stream(
+            spark, stage, static, "*.parquet", one_file_per_batch=True
+        )
+        yield stage, stream, static
 
 
 def _late_split(t):
@@ -133,12 +136,10 @@ def _late_split(t):
 def stream_late_accounting(spark, sf_dir):
     with _staged(spark, sf_dir, "late", _late_split) as (_, stream, static):
         dedup = stream.withWatermark("ts", DELAY).dropDuplicates(["event_id", "ts"])
-        q = _drain(dedup, static, name="late_acct")
-    n_input = sum(p.numInputRows for p in q.recentProgress)
+        progress = _drain(dedup, static, name="late_acct").recentProgress
+    n_input = sum(p.numInputRows for p in progress)
     n_dropped = sum(
-        so.numRowsDroppedByWatermark
-        for p in q.recentProgress
-        for so in p.stateOperators
+        so.numRowsDroppedByWatermark for p in progress for so in p.stateOperators
     )
     return spark.createDataFrame(
         [(n_input, n_dropped, n_input - n_dropped)],
